@@ -4,16 +4,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // dev knob (default unchanged: = cpus): decouple the reduce width
-    // from the core count for partition-vs-core attribution A/Bs
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC") // match Verify exactly
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -26,11 +19,9 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
-    // SQL fn surface + HOF-dot rewrite rule (same wiring a user gets
-    // from GraftExtensions at session build). SPARK_GRAFT_NO_FNS=1 is a
-    // dev knob for A/B-ing the optimizer rule's planning cost.
-    if (!sys.env.contains("SPARK_GRAFT_NO_FNS"))
-      org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    // SQL fn surface, HOF-dot rewrite rule and one-split scan strategy
+    // (same wiring a user gets from GraftExtensions at session build)
+    org.apache.spark.sql.graft.GraftFunctions.register(spark)
     // untimed warmup: JVM/codegen spin-up + parquet footers/page cache,
     // so the first measured query isn't charged for session cold start
     val tables = Seq("region", "nation", "customer", "supplier", "part",

@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Engine extension wiring: exposes the native expressions to the SQL
-  * text surface. Two registration paths:
+  * text surface, installs the HOF-dot-product rewrite
+  * ([[RewriteHofDotProduct]]) and the one-split scan planner strategy
+  * ([[SingleSplitScans]]). Two registration paths:
   *
   *  - build-time: `SparkSession.builder().withExtensions(new
   *    GraftExtensions)` (or `spark.sql.extensions=...GraftExtensions`);
@@ -17,6 +19,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptors.foreach(e.injectFunction)
     e.injectOptimizerRule(_ => RewriteHofDotProduct)
+    e.injectPlannerStrategy(_ => SingleSplitScans)
   }
 }
 
@@ -61,8 +64,9 @@ object GraftFunctions {
       builder)
   }
 
-  /** Runtime registration on an existing session: the SQL functions plus
-    * the HOF-dot-product rewrite rule (idempotent).
+  /** Runtime registration on an existing session: the SQL functions,
+    * the HOF-dot-product rewrite rule and the one-split scan strategy
+    * (idempotent).
     */
   def register(spark: SparkSession): Unit = {
     builders.foreach { case (name, _, builder) =>
@@ -72,5 +76,8 @@ object GraftFunctions {
     val existing = spark.experimental.extraOptimizations
     if (!existing.contains(RewriteHofDotProduct))
       spark.experimental.extraOptimizations = existing :+ RewriteHofDotProduct
+    val strategies = spark.experimental.extraStrategies
+    if (!strategies.contains(SingleSplitScans))
+      spark.experimental.extraStrategies = strategies :+ SingleSplitScans
   }
 }

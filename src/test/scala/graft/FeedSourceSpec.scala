@@ -33,41 +33,55 @@ class FeedSourceSpec extends SparkSpec {
     assert(r.getAs[String]("category") == "u34")
   }
 
+  // registration goes on a child session: it also installs a planner
+  // strategy, which must not change how later suites plan on the
+  // shared session
+  private lazy val registered = {
+    val s = spark.newSession()
+    org.apache.spark.sql.graft.GraftFunctions.register(s)
+    s
+  }
+
   test("dot_product is callable from the SQL text surface") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val r = spark.sql(
+    val r = registered.sql(
       "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
     assert(r.getDouble(0) == 11.0)
   }
 
   test("text kernels are callable from the SQL text surface") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val sh = spark.sql(
+    val s = registered
+    val sh = s.sql(
       "SELECT size(shingle_hashes('a b c d', 3)) AS n").head()
     assert(sh.getInt(0) == 2) // "a b c", "b c d"
-    val sim = spark.sql(
+    val sim = s.sql(
       "SELECT simhash64('a b c') = simhash64('a b c') AS eq, " +
         "simhash64('') IS NULL AS empty_null").head()
     assert(sim.getBoolean(0) && sim.getBoolean(1))
-    val wn = spark.sql(
+    val wn = s.sql(
       "SELECT size(winnow_hashes('a b c d e f', 3, 2)) AS n").head()
     assert(wn.getInt(0) >= 1)
-    val mh = spark.sql(
+    val mh = s.sql(
       "SELECT size(minhash_signature(array('x', 'y'), 16)) AS n").head()
     assert(mh.getInt(0) == 16)
   }
 
   test("extensions class wires dot_product at session build") {
+    // getOrCreate would hand back the shared session and drop the
+    // extension; create() builds a real one on the running context, and
+    // becomes the default/active session until restored below
     val s2 = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]")
       .config("spark.ui.enabled", "false")
       .withExtensions(new org.apache.spark.sql.graft.GraftExtensions)
-      .getOrCreate()
+      .create()
     try {
       val r = s2.sql(
         "SELECT dot_product(array(2.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
       assert(r.getDouble(0) == 14.0)
-    } finally ()
+    } finally {
+      org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    }
   }
 
   test("typed slot-fold aggregator: arrival order, 10-slot split") {

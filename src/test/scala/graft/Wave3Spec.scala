@@ -223,9 +223,17 @@ class Wave3Spec extends SparkSpec {
     assert(diff == 0)
   }
 
+  // registration goes on a child session: it also installs a planner
+  // strategy, which must not change how later suites plan on the
+  // shared session
+  private lazy val registered = {
+    val s = spark.newSession()
+    org.apache.spark.sql.graft.GraftFunctions.register(s)
+    s
+  }
+
   test("optimizer rule rewrites the HOF dot idiom to the native kernel") {
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val df = spark.range(1, 100)
+    val df = registered.range(1, 100)
       .select(col("id"),
         transform(sequence(lit(1), lit(16)), i => i.cast("double") * col("id"))
           .as("a"),
@@ -244,7 +252,7 @@ class Wave3Spec extends SparkSpec {
   }
 
   test("native dot matches HOF null semantics (ragged and null elements)") {
-    val rows = spark.sql(
+    val rows = registered.sql(
       """SELECT
         |  aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, x) -> acc + x) AS hof,
         |  dot_product(a, b) AS nat
