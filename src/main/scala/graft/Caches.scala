@@ -3,6 +3,8 @@ package graft
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.util.Using
+
 import org.apache.spark.sql.SparkSession
 
 /** Cache-lifetime contract for the registered queries.
@@ -77,12 +79,17 @@ object Caches {
   /** Recursive delete for JVM-exit hooks (shared edge artifact root). */
   private[graft] def deleteTree(p: Path): Unit = deleteRecursively(p)
 
+  /** Children before parents; a file that will not go is skipped, and
+    * a root that survives the walk is reported once.
+    */
   private def deleteRecursively(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
     if (Files.exists(p)) {
-      val all = Files.walk(p).iterator().asScala.toSeq
+      val all = Using.resource(Files.walk(p))(_.iterator().asScala.toVector)
       all.reverseIterator.foreach(f =>
         try Files.deleteIfExists(f) catch { case _: Throwable => () })
+      if (Files.exists(p))
+        System.err.println(s"WARN: temp directory $p was not fully deleted")
     }
   }
 }

@@ -1,6 +1,9 @@
 package graft.sources
 
 import java.nio.file.Files
+import java.sql.{DriverManager, SQLException}
+import java.util.Locale
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -18,29 +21,60 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    `lowerBound` / `upperBound` / `numPartitions`) so a large table
   *    arrives as N concurrent range queries, not one driver-side cursor.
   *
+  * The database is ONE in-memory Derby database per JVM
+  * (`jdbc:derby:memory:graft`), created on first use and alive until
+  * the JVM exits — the closer port of the reference's single long-lived
+  * `pg.Pool`. Each caller writes its own uniquely named table
+  * ([[scratchTable]]) and drops it at the next `Caches.releaseAll`, so
+  * a call pays no database create, no fsync and no directory delete.
+  * Like any embedded database it is reachable only from the JVM that
+  * hosts it: it stands in for Postgres in local mode, where executors
+  * share the driver's JVM, and not on a cluster.
+  *
   * Swapping Derby for Postgres is a URL + driver-class change only.
   */
 object Jdbc {
 
-  /** Fresh embedded-Derby database under a temp directory; the log is
-    * redirected there too so nothing touches the working directory.
+  /** URL of the JVM-lived in-memory database. The first use points
+    * Derby's log at one per-JVM temp file (before Derby boots, which is
+    * when it reads the property; a caller's own setting wins) and
+    * creates the database.
     */
-  def tempDerbyUrl(tag: String): String = {
-    val dir = Files.createTempDirectory(s"graft_derby_${tag}_")
-    System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-    // post-consumption hygiene: cleanly shut down THIS database (the
-    // expected success signal is SQLState 08006, thrown), then hand
-    // the directory to the temp-dir sweep (Caches runs hooks before
-    // deleting tracked dirs, so the registration below is picked up
-    // in the same releaseAll pass)
-    graft.Caches.onRelease { () =>
-      try java.sql.DriverManager
-        .getConnection(s"jdbc:derby:$dir/db;shutdown=true")
-      catch { case _: Throwable => () }
-      graft.Caches.trackTempDir(dir)
-      ()
+  private[graft] lazy val sessionUrl: String = {
+    if (System.getProperty("derby.stream.error.file") == null) {
+      val log = Files.createTempFile("derby_graft_", ".log")
+      log.toFile.deleteOnExit()
+      System.setProperty("derby.stream.error.file", log.toString)
     }
-    s"jdbc:derby:$dir/db;create=true"
+    val url = "jdbc:derby:memory:graft;create=true"
+    DriverManager.getConnection(url).close()
+    url
+  }
+
+  private val tableSeq = new AtomicLong()
+
+  /** A fresh table name in the session database, returned with the
+    * database URL. The hook that drops the table is registered with
+    * `Caches.onRelease` before the caller writes anything, so a write
+    * that fails half-way still leaves no table behind.
+    */
+  def scratchTable(tag: String): (String, String) = {
+    require(tag.matches("[A-Za-z][A-Za-z0-9_]*"), s"bad table tag: $tag")
+    val url = sessionUrl
+    // Derby folds unquoted identifiers to upper case
+    val table = s"${tag}_${tableSeq.incrementAndGet()}".toUpperCase(Locale.ROOT)
+    graft.Caches.onRelease(() => dropTable(url, table))
+    (url, table)
+  }
+
+  /** `DROP TABLE`, where a table that was never created (SQLState
+    * 42Y55) is not an error.
+    */
+  private def dropTable(url: String, table: String): Unit = {
+    val conn = DriverManager.getConnection(url)
+    try conn.createStatement().execute(s"DROP TABLE $table")
+    catch { case e: SQLException if e.getSQLState == "42Y55" => () }
+    finally conn.close()
   }
 
   /** Executor-side batched append: each partition opens one connection
@@ -99,9 +133,12 @@ object Jdbc {
         sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"),
         min(col("event_id")).as("min_event_id"),
         max(col("event_id")).as("max_event_id"))
-    val url = tempDerbyUrl("q65")
-    writeTable(summary, url, "etype_summary", maxConnections = 4)
-    readTableWhole(spark, url, "etype_summary")
+    val (url, table) = scratchTable("q65")
+    writeTable(summary, url, table, maxConnections = 4)
+    // the whole-table read is one partition already; coalesce(1) makes
+    // that known to the planner (SinglePartition), so the sort below
+    // runs in that task instead of behind a sampled range exchange
+    readTableWhole(spark, url, table).coalesce(1)
       .select(col("event_type"), col("n_events"), col("total_value"),
         col("min_event_id"), col("max_event_id"))
       .orderBy(col("event_type"))
