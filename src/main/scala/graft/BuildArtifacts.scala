@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Explicit stored-artifact build step (r13 verdict #2): pre-builds
   * the shared artifacts for a corpus dir so later query runs —
   * including isolated `SPARK_GRAFT_ONLY` bench runs — pay only the
@@ -31,17 +29,7 @@ object BuildArtifacts {
     val sfDir = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val spark = Sessions.local()
     if (!sys.env.contains("SPARK_GRAFT_ARTIFACT_ROOT"))
       System.err.println("WARN: SPARK_GRAFT_ARTIFACT_ROOT not set — " +
         "artifacts land in a per-JVM temp root and die with this process")

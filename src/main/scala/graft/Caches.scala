@@ -76,8 +76,27 @@ object Caches {
     }
   }
 
-  /** Recursive delete for JVM-exit hooks (shared edge artifact root). */
+  /** Recursive delete, for callers that own a directory's lifetime. */
   private[graft] def deleteTree(p: Path): Unit = deleteRecursively(p)
+
+  private val exitDirs = new ConcurrentLinkedQueue[Path]()
+  private lazy val exitHook: Unit = {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      exitDirs.forEach(p =>
+        try deleteRecursively(p) catch { case _: Throwable => () })))
+    ()
+  }
+
+  /** A fresh temp directory, deleted with its contents at JVM exit.
+    * One hook serves every such directory, and a failure on one does
+    * not stop the others from going.
+    */
+  private[graft] def tempDirDeletedAtExit(prefix: String): Path = {
+    exitHook
+    val p = Files.createTempDirectory(prefix)
+    exitDirs.add(p)
+    p
+  }
 
   /** Children before parents; a file that will not go is skipped, and
     * a root that survives the walk is reported once.

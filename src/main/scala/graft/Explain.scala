@@ -1,39 +1,26 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Dev aid: print the formatted physical plan (and optionally time) of
-  * registered queries. `sbt "runMain graft.Explain q91 q33"`; set
-  * SPARK_GRAFT_EXPLAIN_TIME=1 to also execute each query once.
+/** Plan-quality diagnostic: prints the formatted physical plan of the
+  * registered queries whose names start with one of the arguments, or
+  * of every registered query when there are none. Used to audit that
+  * filters reach the scan (PushedFilters), projections prune
+  * (ReadSchema), dimension joins broadcast, and expressions stay inside
+  * WholeStageCodegen.
+  * `sbt "runMain graft.Explain q91 q33"`; the corpus is
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
-    val time = sys.env.contains("SPARK_GRAFT_EXPLAIN_TIME")
-    args.foreach { prefix =>
-      SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach {
-        case (name, fn) =>
-          println(s"========== $name ==========")
-          val df = fn(spark, sfDir)
-          df.explain("formatted")
-          if (time) {
-            val t0 = System.nanoTime()
-            val n = df.count()
-            println(f"-- $name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            Caches.releaseAll(spark)
-          }
+    val spark = Sessions.local()
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => args.isEmpty || args.exists(n.startsWith) }
+      .foreach { case (name, fn) =>
+        println(s"========== $name ==========")
+        try fn(spark, sfDir).explain("formatted")
+        catch { case e: Throwable => println(s"plan failed: ${e.getMessage}") }
+        Caches.releaseAll(spark)
       }
-    }
     spark.stop()
   }
 }

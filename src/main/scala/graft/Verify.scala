@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match Bench: split small single-file fixtures across cores
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // dev aid (mirrors Bench): SPARK_GRAFT_ONLY=q79,q84 dumps a subset
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -10,10 +10,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * ([[RewriteHofDotProduct]]) and the one-split scan planner strategy
   * ([[SingleSplitScans]]). Two registration paths:
   *
-  *  - build-time: `SparkSession.builder().withExtensions(new
-  *    GraftExtensions)` (or `spark.sql.extensions=...GraftExtensions`);
-  *  - runtime: [[GraftFunctions.register]] on an existing session (used
-  *    by tests and the driver-owned sessions, which we don't construct).
+  *  - build-time: `withExtensions(new GraftExtensions)` on a session
+  *    builder (or `spark.sql.extensions=...GraftExtensions`), for a
+  *    session someone else builds;
+  *  - runtime: [[GraftFunctions.register]] on an existing session. Every
+  *    session graft builds ([[graft.Sessions]]: the mains and the tests)
+  *    and the perfbench harness session take this path, which puts the
+  *    rewrite in `extraOptimizations` rather than the injected-rule batch.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {

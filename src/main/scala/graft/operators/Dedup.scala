@@ -850,12 +850,8 @@ object Dedup {
     * between-queries `releaseAll`, so ten reports share one build.
     */
   private lazy val artifactRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ROOT", {
-      val p = java.nio.file.Files.createTempDirectory("graft_artifact_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try graft.Caches.deleteTree(p) catch { case _: Throwable => () }))
-      p.toString
-    })
+    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ROOT",
+      graft.Caches.tempDirDeletedAtExit("graft_artifact_").toString)
 
   /** The verified near-dup edge relation (id_a < id_b, jaccard ≥ 0.5)
     * as a SHARED persisted artifact: built by [[minhashOracledDf]]

@@ -66,10 +66,18 @@ object Tables {
     * integer `div` so the truncation is exact (a double roundtrip would
     * lose precision at 2024-epoch nanos ≈ 1.7e18).
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(rawEvents(spark, dir))
+
+  /** The events scan as the footer types it, before [[normalizeTs]]:
+    * the one path every events read, batch or stream, starts from.
+    * Sessions from [[graft.Sessions]] already read TIMESTAMP(NANOS) as
+    * a long; the set is here for a session the caller of
+    * `SparkEntry.entry` built.
+    */
+  private[graft] def rawEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = read(spark, dir, "events")
-    normalizeTs(raw)
+    read(spark, dir, "events")
   }
 
   /** Normalize a `ts` column to `timestamp_ntz` from any fixture vintage:

@@ -50,12 +50,8 @@ object LedgerArtifacts {
     * planner's stored edge stats) share the same root and lifetime.
     */
   private[graft] lazy val artifactRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ROOT", {
-      val p = Files.createTempDirectory("graft_ledger_artifact_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try graft.Caches.deleteTree(p) catch { case _: Throwable => () }))
-      p.toString
-    })
+    sys.env.getOrElse("SPARK_GRAFT_ARTIFACT_ROOT",
+      graft.Caches.tempDirDeletedAtExit("graft_ledger_artifact_").toString)
 
   /** Stable artifact-key suffix for a fixture dir. */
   private[graft] def dirKey(dir: String): String =

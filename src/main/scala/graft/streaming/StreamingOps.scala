@@ -384,16 +384,25 @@ object StreamingOps {
     if (id > lastBatchId.get) lastBatchId.set(id)
   }
 
-  def streamEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** The events table as a file stream over `sourceDir` (default
+    * `dir`; a file source needs a dir) of the files matching
+    * `sourceGlob`, at most `maxFilesPerTrigger` per micro-batch, with
+    * `ts` normalized like [[Tables.events]].
+    */
+  def streamEvents(spark: SparkSession, dir: String,
+      sourceGlob: String = "events.parquet",
+      maxFilesPerTrigger: Option[Int] = None,
+      sourceDir: Option[String] = None): DataFrame = {
     // a streaming file source needs the schema up front — one footer read
     // (driver-side, metadata only) pins the vintage-dependent ts type
-    val tsType = Tables.read(spark, dir, "events")
+    val tsType = Tables.rawEvents(spark, dir)
       .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    Tables.normalizeTs(spark.readStream
+    val reader = spark.readStream
       .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", "events.parquet") // file source needs a dir
-      .parquet(dir))
+      .option("pathGlobFilter", sourceGlob)
+    maxFilesPerTrigger.foreach(m =>
+      reader.option("maxFilesPerTrigger", m.toString))
+    Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
   }
 
   /** Runs `df` as an Update-mode stream whose micro-batches append to a
@@ -2145,15 +2154,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "scd2")
     val histRoot = stateDir(root, "history")
     val ledger = new VersionedLedger(spark, histRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -2364,15 +2366,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "ewma_anomaly")
     val ledgerRoot = stateDir(root, "ledger")
     val ledger = new VersionedLedger(spark, ledgerRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -2428,15 +2423,8 @@ object StreamingOps {
     // still sees its correct pre-batch state (r11 advice #1)
     val clickLedger = new VersionedLedger(spark, clicksRoot, root)
     val dailyLedger = new VersionedLedger(spark, ledgerRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -2552,15 +2540,8 @@ object StreamingOps {
       val r = spark.read.parquet(v).agg(max(col("floor"))).collect()(0)
       if (!r.isNullAt(0)) floorRef.set(r.getLong(0))
     }
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -2639,15 +2620,8 @@ object StreamingOps {
     val lastLedger = new VersionedLedger(spark, lastRoot, root)
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -2764,15 +2738,8 @@ object StreamingOps {
     val lastLedger = new VersionedLedger(spark, lastRoot, root)
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -3005,15 +2972,8 @@ object StreamingOps {
     val lastLedger = new VersionedLedger(spark, lastRoot, root)
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -3595,15 +3555,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, op)
     val sumsRoot = stateDir(root, "sums")
     val ledger = new VersionedLedger(spark, sumsRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4057,15 +4010,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "retention")
     val udRoot = stateDir(root, "user_days")
     val ledger = new VersionedLedger(spark, udRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4129,15 +4075,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, op)
     val statsRoot = stateDir(root, "user_stats")
     val ledger = new VersionedLedger(spark, statsRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4338,15 +4277,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "ltv")
     val udcRoot = stateDir(root, "user_day_cents")
     val ledger = new VersionedLedger(spark, udcRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4390,15 +4322,8 @@ object StreamingOps {
     val anchorsLedger = new VersionedLedger(spark, anchorsRoot, root)
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4547,15 +4472,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "survival")
     val spansRoot = stateDir(root, "user_spans")
     val ledger = new VersionedLedger(spark, spansRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4602,15 +4520,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, op)
     val dcRoot = stateDir(root, "daily_counts")
     val ledger = new VersionedLedger(spark, dcRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>
@@ -4713,15 +4624,8 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, op)
     val udRoot = stateDir(root, "user_days")
     val ledger = new VersionedLedger(spark, udRoot, root)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tsType = Tables.read(spark, dir, "events")
-      .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
+      sourceDir)
     val w = stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], id: Long) =>

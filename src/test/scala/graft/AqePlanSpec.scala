@@ -54,12 +54,15 @@ class AqePlanSpec extends SparkSpec {
     // 100 TB contract the scaladoc promises
     import graft.operators.Similarity
     val plan = finalPlan(Similarity.randomProjection(spark, sfDir))
+    assert(plan.contains("Sort ["), s"output sort missing:\n$plan")
+    assert(Seq("hashpartitioning", "Join", "Aggregate").forall(
+      !plan.contains(_)), s"projection is not map-only:\n$plan")
     // (AQE prints the pre- and post-adaptive plan, so the one sort
-    // exchange can appear twice — assert the KIND, not the count)
+    // exchange can appear twice — assert the KIND, not the count; a
+    // one-split embeddings file sorts in its one task, with none)
     val exchanges = "(?m)^.*Exchange .*$".r.findAllIn(plan).toSeq
       .filterNot(_.contains("Reused"))
-    assert(exchanges.nonEmpty &&
-      exchanges.forall(_.contains("rangepartitioning")),
+    assert(exchanges.forall(_.contains("rangepartitioning")),
       s"expected only the output-sort range exchange:\n$exchanges")
     Caches.releaseAll(spark)
   }

@@ -27,7 +27,7 @@ class ArtifactFreshnessSpec extends SparkSpec {
         .as("event_type"),
       (col("id") % 10).cast("double").as("value"),
       lit("{}").as("props"))
-    val staging = Files.createTempDirectory("graft_fresh_staging_")
+    val staging = SparkSpec.tempDir("graft_fresh_staging_")
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
     val part = Files.list(staging).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).next()
@@ -40,7 +40,7 @@ class ArtifactFreshnessSpec extends SparkSpec {
   test("payload-only corpus change rebuilds the shared drained state") {
     // NOT tracked up front: the mid-test releaseAll must not delete
     // the corpus between the two drains; tracked at the end instead
-    val dir = Files.createTempDirectory("graft_fresh_corpus_")
+    val dir = SparkSpec.tempDir("graft_fresh_corpus_")
     writeEvents(dir, dayOffset = 0)
     val before = streaming.StreamingOps
       .streamingGrowth(spark, dir.toString)

@@ -11,8 +11,7 @@ class ContaminationSpec extends SparkSpec {
 
   test("purge cells sum-merge: two halves equal the one-shot summary") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val testWPath = java.nio.file.Files
-      .createTempDirectory("graft_ctm_spec_").toString + "/w"
+    val testWPath = SparkSpec.tempDir("graft_ctm_spec_").toString + "/w"
     Contamination.buildTestWindowTable(spark, sfDir, testWPath)
     val testW = spark.read.parquet(testWPath)
     val whole = Contamination.purgeFromCells(

@@ -63,8 +63,7 @@ class DedupChainSpec extends SparkSpec {
   }
 
   test("persisted-band-table incremental minhash equals the in-memory path") {
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("graft_bandtable_").toString + "/bands"
+    val tableDir = SparkSpec.tempDir("graft_bandtable_").toString + "/bands"
     try {
       def collectPairs(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getAs[Long]("new_id"), r.getAs[Long]("corpus_id"),
@@ -122,8 +121,7 @@ class DedupChainSpec extends SparkSpec {
       (id, text, "en", "crafted", text.length.toLong)
     val all = Seq(row(19L, dup), row(29L, dup), row(4L, corpusDoc),
       row(6L, (0 until 30).map(t => s"zz$t").mkString(" ")))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_xbatch_").toString
+    val root = SparkSpec.tempDir("graft_xbatch_").toString
     // the fixture layout is FLAT single files (documents.parquet is a
     // file, not a directory), so write each frame and promote its part
     // file to a flat name the glob can see
@@ -235,8 +233,7 @@ class DedupChainSpec extends SparkSpec {
     def row(id: Long, text: String) =
       (id, text, "en", "crafted", text.length.toLong)
     val all = Seq(row(19L, d19), row(29L, d29), row(4L, corpus))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_xbatchwin_").toString
+    val root = SparkSpec.tempDir("graft_xbatchwin_").toString
     def writeFlat(rows: Seq[(Long, String, String, String, Long)],
         dest: String): Unit = {
       val tmp = s"$root/_w"
@@ -392,7 +389,7 @@ class DedupChainSpec extends SparkSpec {
       .map { case (id, text) =>
         (id, text, "en", "crafted", text.length.toLong)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("simhash-o").toString
+    val dir = SparkSpec.tempDir("simhash-o").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val sig = Dedup.simhashOracled(spark, dir).collect()
@@ -423,7 +420,7 @@ class DedupChainSpec extends SparkSpec {
       .map { case (id, text) =>
         (id, text, "en", "crafted", text.length.toLong)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("containment").toString
+    val dir = SparkSpec.tempDir("containment").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val cont = Dedup.containmentOracledDf(
@@ -471,7 +468,7 @@ class DedupChainSpec extends SparkSpec {
       (1L, (short ++ (0 until 6).map(i => s"z$i")).mkString(" ")))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("cont-prod").toString
+    val dir = SparkSpec.tempDir("cont-prod").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val pair = Dedup.containmentCandidates(spark, dir).collect()
@@ -500,7 +497,7 @@ class DedupChainSpec extends SparkSpec {
       (2L, other.mkString(" ")))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("cont-asym").toString
+    val dir = SparkSpec.tempDir("cont-asym").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       // pin the gap: the symmetric production path does NOT surface the
@@ -563,7 +560,7 @@ class DedupChainSpec extends SparkSpec {
       (2L, a))        // whole doc is boilerplate → empty reassembly
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("boilerplate").toString
+    val dir = SparkSpec.tempDir("boilerplate").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = Dedup.boilerplateRemoval(spark, dir).collect()
@@ -594,7 +591,7 @@ class DedupChainSpec extends SparkSpec {
       (2L, a))        // whole doc is a duplicate paragraph → empty out
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("para-dedup").toString
+    val dir = SparkSpec.tempDir("para-dedup").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = Dedup.paragraphDedup(spark, dir).collect()
@@ -664,7 +661,7 @@ class DedupChainSpec extends SparkSpec {
       .map { case (id, text) =>
         (id, text, "en", "crafted", text.length.toLong)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("span-dedup").toString
+    val dir = SparkSpec.tempDir("span-dedup").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = Dedup.spanDedup(spark, dir).collect()
@@ -696,8 +693,7 @@ class DedupChainSpec extends SparkSpec {
     }
     val all = streamDocs ++ Seq(row(4L, corpusDoc),
       row(6L, (0 until 30).map(t => s"zz$t").mkString(" ")))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_compact_").toString
+    val root = SparkSpec.tempDir("graft_compact_").toString
     def writeFlat(rows: Seq[(Long, String, String, String, Long)],
         dest: String): Unit = {
       val tmp = s"$root/_w"
@@ -758,8 +754,7 @@ class DedupChainSpec extends SparkSpec {
     val dup = "same exact content here"
     def row(id: Long, text: String) =
       (id, text, "en", "crafted", text.length.toLong)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_regdedup_").toString
+    val root = SparkSpec.tempDir("graft_regdedup_").toString
     def writeFlat(rows: Seq[(Long, String, String, String, Long)],
         dest: String): Unit = {
       val tmp = s"$root/_w"
@@ -813,8 +808,7 @@ class DedupChainSpec extends SparkSpec {
       row(219L, spam), // batch doc hitting the mega-bucket
       row(229L, nearA), row(224L, nearB),
       row(226L, (0 until 30).map(t => s"zz$t").mkString(" ")))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_megacorpus_").toString
+    val root = SparkSpec.tempDir("graft_megacorpus_").toString
     def writeFlat(rows: Seq[(Long, String, String, String, Long)],
         dest: String): Unit = {
       val tmp = s"$root/_w"

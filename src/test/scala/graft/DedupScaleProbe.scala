@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decade scale probe for the dedup/banding chain (r13 verdict #4) —
@@ -30,12 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32)
     def time(label: String)(thunk: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = thunk
@@ -74,12 +68,12 @@ object DedupScaleProbe {
         banded.unpersist(false); sh.unpersist(false)
         c
       }
-      val artPath = java.nio.file.Files
-        .createTempDirectory(s"graft_dedup_probe_$tag").toString + "/a"
+      val artPath =
+        SparkSpec.tempDir(s"graft_dedup_probe_$tag").toString + "/a"
       // materialize the corpus once so build and read fingerprint the
       // same table (the fingerprint scans doc_id/n_chars)
-      val matDir = java.nio.file.Files
-        .createTempDirectory(s"graft_dedup_probe_docs_$tag").toString
+      val matDir =
+        SparkSpec.tempDir(s"graft_dedup_probe_docs_$tag").toString
       docs.write.mode("overwrite").parquet(matDir)
       val mat = spark.read.parquet(matDir)
       time(s"artifact_build_$tag") {

@@ -12,8 +12,8 @@ class DeletionVectorsSpec extends SparkSpec {
 
   test("stored DVs round-trip: parquet DV anti-join equals the relational read") {
     val docs = DeletionVectors.filedDocs(spark, sfDir).persist()
-    val dvPath = Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_dv_")).toString + "/dv"
+    val dvPath = Caches.trackTempDir(SparkSpec.tempDir("graft_dv_"))
+      .toString + "/dv"
     docs.filter(col("doc_id") % 37 === 0)
       .select(col("file_id"), col("doc_id"))
       .write.mode("overwrite").parquet(dvPath)

@@ -34,8 +34,7 @@ class DupEdgeIncrementalSpec extends SparkSpec {
 
   test("fixture corpus: maintained relation equals the full rebuild") {
     val docs = Tables.documents(spark, sfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_incr_spec_").toString
+    val root = SparkSpec.tempDir("graft_incr_spec_").toString
     try {
       val maintained = sortedRows(Dedup.incrementalErasedAt(spark, docs,
         s"$root/full", s"$root/erased", Mod))
@@ -68,8 +67,7 @@ class DupEdgeIncrementalSpec extends SparkSpec {
 
   test("cap-boundary crossing is repaired exactly") {
     val docs = boundaryCorpus
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_incr_boundary_").toString
+    val root = SparkSpec.tempDir("graft_incr_boundary_").toString
     try {
       // the full-corpus artifact quarantines BOTH cohorts: no edges,
       // 70×4 + 80×4 hot-membership rows
@@ -96,8 +94,7 @@ class DupEdgeIncrementalSpec extends SparkSpec {
 
   test("second call reads the maintained artifact, never re-maintains") {
     val docs = Tables.documents(spark, sfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_incr_once_").toString
+    val root = SparkSpec.tempDir("graft_incr_once_").toString
     try {
       Dedup.incrementalErasedAt(spark, docs, s"$root/full",
         s"$root/erased", Mod).count()

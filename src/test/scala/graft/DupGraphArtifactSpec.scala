@@ -29,8 +29,7 @@ class DupGraphArtifactSpec extends SparkSpec {
 
   test("artifact read path is bit-identical to the standalone chain") {
     val docs = Tables.documents(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_edge_spec_").toString + "/art"
+    val path = SparkSpec.tempDir("graft_edge_spec_").toString + "/art"
     try {
       val art = sortedRows(Dedup.dupEdgesAt(spark, docs, path))
       val standalone = sortedRows(Dedup.minhashOracledDf(docs))
@@ -41,8 +40,7 @@ class DupGraphArtifactSpec extends SparkSpec {
 
   test("second call reads the artifact instead of rebuilding") {
     val docs = Tables.documents(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_edge_spec_").toString + "/art"
+    val path = SparkSpec.tempDir("graft_edge_spec_").toString + "/art"
     try {
       Dedup.dupEdgesAt(spark, docs, path).count()
       val builds = Dedup.dupEdgeBuildCount
@@ -55,8 +53,7 @@ class DupGraphArtifactSpec extends SparkSpec {
   test("corpus change under the same path forces a rebuild") {
     val docs = Tables.documents(spark, sfDir)
     val subset = docs.filter(col("doc_id") % 2 === 0)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_edge_spec_").toString + "/art"
+    val path = SparkSpec.tempDir("graft_edge_spec_").toString + "/art"
     try {
       Dedup.dupEdgesAt(spark, subset, path).count()
       val builds = Dedup.dupEdgeBuildCount

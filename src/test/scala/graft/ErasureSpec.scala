@@ -12,8 +12,8 @@ import graft.SparkSpec
 class ErasureSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshRoot(): String = java.nio.file.Files
-    .createTempDirectory("graft_erasure_spec_").toString
+  private def freshRoot(): String =
+    SparkSpec.tempDir("graft_erasure_spec_").toString
 
   private def batchDf(ids: Seq[Long]) =
     ids.map(i => (i, s"s${i % 3}", 10L + i)).toDF(
@@ -150,8 +150,7 @@ class ErasureSpec extends SparkSpec {
 
   test("artifact rebuild: fingerprint misses when erased docs vanish") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_erasure_art_").toString + "/a"
+    val path = SparkSpec.tempDir("graft_erasure_art_").toString + "/a"
     val beforeDf = graft.operators.Dedup.dupEdgesAt(spark, docs, path)
     val before = beforeDf.count()
     val incidentBefore = beforeDf.filter(col("id_a") % 37 === 0 ||

@@ -33,34 +33,24 @@ class FeedSourceSpec extends SparkSpec {
     assert(r.getAs[String]("category") == "u34")
   }
 
-  // registration goes on a child session: it also installs a planner
-  // strategy, which must not change how later suites plan on the
-  // shared session
-  private lazy val registered = {
-    val s = spark.newSession()
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
-    s
-  }
-
   test("dot_product is callable from the SQL text surface") {
-    val r = registered.sql(
+    val r = spark.sql(
       "SELECT dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()
     assert(r.getDouble(0) == 11.0)
   }
 
   test("text kernels are callable from the SQL text surface") {
-    val s = registered
-    val sh = s.sql(
+    val sh = spark.sql(
       "SELECT size(shingle_hashes('a b c d', 3)) AS n").head()
     assert(sh.getInt(0) == 2) // "a b c", "b c d"
-    val sim = s.sql(
+    val sim = spark.sql(
       "SELECT simhash64('a b c') = simhash64('a b c') AS eq, " +
         "simhash64('') IS NULL AS empty_null").head()
     assert(sim.getBoolean(0) && sim.getBoolean(1))
-    val wn = s.sql(
+    val wn = spark.sql(
       "SELECT size(winnow_hashes('a b c d e f', 3, 2)) AS n").head()
     assert(wn.getInt(0) >= 1)
-    val mh = s.sql(
+    val mh = spark.sql(
       "SELECT size(minhash_signature(array('x', 'y'), 16)) AS n").head()
     assert(mh.getInt(0) == 16)
   }

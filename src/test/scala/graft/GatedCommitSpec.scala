@@ -18,8 +18,7 @@ class GatedCommitSpec extends SparkSpec {
     // re-run (state gate not set), skip the already-committed
     // quarantine (its own gate), and end with BOTH trails
     // single-versioned at the same position
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gate_crash_").toString
+    val root = SparkSpec.tempDir("graft_gate_crash_").toString
     val dead = new StreamingOps.VersionedLedger(spark, s"$root/dead",
       Some(root))
     val bad = Seq((2L, "s0", 50L)).toDF("doc_id", "source", "n_chars")

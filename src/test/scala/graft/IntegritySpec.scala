@@ -37,7 +37,7 @@ class IntegritySpec extends SparkSpec {
   test("restore parity detects a tampered export") {
     val root = Erasure.registryLedgerShared(spark, sfDir)
     val exportRoot = graft.Caches.trackTempDir(
-      java.nio.file.Files.createTempDirectory("graft_export_t_")).toString
+      SparkSpec.tempDir("graft_export_t_")).toString
     Integrity.exportVersions(spark, root, exportRoot)
     // tamper the v1 backup: drop one row and rewrite the copy
     val v1 = s"$exportRoot/v1"
@@ -63,7 +63,7 @@ class IntegritySpec extends SparkSpec {
   test("restore executor: a dropped backup version breaks the chain there") {
     val root = Erasure.registryLedgerShared(spark, sfDir)
     val work = graft.Caches.trackTempDir(
-      java.nio.file.Files.createTempDirectory("graft_restore_t_"))
+      SparkSpec.tempDir("graft_restore_t_"))
       .toString
     Integrity.exportVersions(spark, root, s"$work/backup")
     // lose version 1's backup AND its manifest row (a partial backup)
@@ -116,8 +116,7 @@ class IntegritySpec extends SparkSpec {
       "retention floor fails naming the floor") {
     // normal PITR: restore to v1 leaves exactly versions 0-1
     val root = Erasure.registryLedgerShared(spark, sfDir)
-    val work = java.nio.file.Files
-      .createTempDirectory("graft_pitr_spec_").toString
+    val work = SparkSpec.tempDir("graft_pitr_spec_").toString
     Integrity.exportVersions(spark, root, s"$work/backup")
     Integrity.restoreTo(spark, s"$work/backup", s"$work/r1", 1L)
     assert(Provenance.committedVersions(spark, s"$work/r1")

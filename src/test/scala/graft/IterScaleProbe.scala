@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Decade scale probe for the iterative-graph family (r12 verdict #4:
@@ -18,12 +17,7 @@ import org.apache.spark.sql.functions._
   */
 object IterScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(32)
     def time(label: String)(thunk: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = thunk

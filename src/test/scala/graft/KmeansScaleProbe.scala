@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc scale probe for the q124 k-means family (test scope, not
   * shipped): times the capped oracle shape against the uncapped
   * production path on the 200k-vector sf0.1 fixture. Run with
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object KmeansScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    val spark = Sessions.local(32)
     def time(label: String)(thunk: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = thunk

@@ -19,8 +19,8 @@ class LakeWriteSpec extends SparkSpec {
     StructField("o_custkey", LongType)))
 
   private def freshRoot(): String = {
-    val dir = Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_lake_write_")).toString + "/t"
+    val dir = Caches.trackTempDir(SparkSpec.tempDir("graft_lake_write_"))
+      .toString + "/t"
     val fs = new HPath(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     GraftLake.createTable(fs, dir, schema,
@@ -189,8 +189,8 @@ class LakeWriteSpec extends SparkSpec {
       "pruning holds on the written table") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val dir = Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_lake_pwrite_")).toString + "/t"
+    val dir = Caches.trackTempDir(SparkSpec.tempDir("graft_lake_pwrite_"))
+      .toString + "/t"
     val fs = new HPath(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     GraftLake.createTable(fs, dir, StructType(Seq(
@@ -264,8 +264,8 @@ class LakeWriteSpec extends SparkSpec {
     val root = freshRoot()
     append(root, 0L, 400L, "s0")
     append(root, 400L, 600L, "s1")
-    val base = Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_lake_srcspec_")).toString
+    val base = Caches.trackTempDir(SparkSpec.tempDir("graft_lake_srcspec_"))
+      .toString
     def drain(): Long = {
       var n = 0L
       val q = spark.readStream
@@ -331,8 +331,8 @@ class LakeWriteSpec extends SparkSpec {
     val bronze = freshRoot()
     append(bronze, 0L, 400L, "b0")
     append(bronze, 400L, 700L, "b1")
-    val silver = Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_lake_silver_")).toString + "/t"
+    val silver = Caches.trackTempDir(SparkSpec.tempDir("graft_lake_silver_"))
+      .toString + "/t"
     val fs = new HPath(silver)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     GraftLake.createTable(fs, silver, StructType(Seq(

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{Occ, Provenance}
@@ -22,7 +20,7 @@ class OccRaceSpec extends SparkSpec {
   test("raced writers: one winner per version, duplicate resolves " +
       "to one commit, reader never sees a torn version") {
     val root = Caches.trackTempDir(
-      Files.createTempDirectory("graft_occ_race_spec_")).toString +
+      SparkSpec.tempDir("graft_occ_race_spec_")).toString +
       "/balances"
 
     // concurrent reader: polls the committed-version listing during

@@ -13,8 +13,8 @@ import graft.operators.Optimize
 class OptimizeSpec extends SparkSpec {
 
   test("rewrite folds DVs physically and files match the artifact") {
-    val out = Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_optimize_")).toString + "/orders"
+    val out = Caches.trackTempDir(SparkSpec.tempDir("graft_optimize_"))
+      .toString + "/orders"
     // the executor's write: one dir per output file id, as a writer
     // honoring maxRecordsPerFile would cut them
     Optimize.rewrittenFiles(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 /** Plan-shape probe for newly added families (test scope, not
   * shipped): prints exchange/broadcast/pushdown counts from the
   * pre-execution physical plan. Counts over-report reused persisted
@@ -10,10 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(8)
     val d = "/root/testdata/sf0.01"
     for ((n, q) <- Seq(
       "q381" -> operators.Basket.brandAffinity(spark, d),

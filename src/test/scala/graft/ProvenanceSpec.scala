@@ -15,8 +15,7 @@ class ProvenanceSpec extends SparkSpec {
 
   private def craftedDir(): String = {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_provspec_").toString
+    val root = SparkSpec.tempDir("graft_provspec_").toString
     val docs = Seq(
       (0L, "alpha"), (1L, "alpha"), (2L, "alpha"),
       (3L, "alpha"), (4L, "beta"), (5L, "beta"),
@@ -84,8 +83,7 @@ class ProvenanceSpec extends SparkSpec {
   }
 
   test("committedVersions excludes a crash-partial version dir (no _SUCCESS)") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_provledger_").toString
+    val root = SparkSpec.tempDir("graft_provledger_").toString
     def mk(name: String, committed: Boolean): Unit = {
       val d = new java.io.File(s"$root/$name")
       assert(d.mkdirs())

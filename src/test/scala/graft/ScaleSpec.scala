@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Scale-mechanics evidence: the techniques that matter at 1000
@@ -11,7 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class ScaleSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft-scale").toString
+  private lazy val tmp = SparkSpec.tempDir("graft-scale").toString
 
   test("bucketed tables join without an exchange") {
     val li = sources.Tables.lineitem(spark, sfDir)

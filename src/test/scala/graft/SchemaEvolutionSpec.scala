@@ -13,8 +13,8 @@ import graft.SparkSpec
 class SchemaEvolutionSpec extends SparkSpec {
   import spark.implicits._
 
-  private def freshRoot(): String = java.nio.file.Files
-    .createTempDirectory("graft_schema_spec_").toString
+  private def freshRoot(): String =
+    SparkSpec.tempDir("graft_schema_spec_").toString
 
   private def narrow(ids: Seq[Long]) =
     ids.map(i => (i, s"s${i % 2}")).toDF("doc_id", "source")

@@ -6,21 +6,15 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{GraftFunctions, SingleSplitScanExec}
+import org.apache.spark.sql.graft.SingleSplitScanExec
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** The one-split scan strategy removes exchanges only where the scan
-  * really is one partition, and never changes an answer. Runs on child
-  * sessions (the strategy must not leak into the shared session's
-  * plans); `plain` is the same session without it.
+  * really is one partition, and never changes an answer. Runs on the
+  * shared (shipped) session; `plain` is a child session without it.
   */
 class SingleSplitScanSpec extends SparkSpec {
 
-  private lazy val single: SparkSession = {
-    val s = spark.newSession()
-    GraftFunctions.register(s)
-    s
-  }
   private lazy val plain: SparkSession = spark.newSession()
 
   private def query(prefix: String): Registry.Q =
@@ -50,7 +44,7 @@ class SingleSplitScanSpec extends SparkSpec {
     df.collect().map(_.toString).toSeq.sorted
 
   private def tempDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_onesplit_$tag").toString
+    SparkSpec.tempDir(s"graft_onesplit_$tag").toString
 
   /** `n` rows of (k, v) as a parquet directory of exactly `files` files. */
   private def writeParquet(tag: String, n: Int, files: Int): String = {
@@ -63,19 +57,19 @@ class SingleSplitScanSpec extends SparkSpec {
 
   test("crm_etl: q01/q02/q44 plan without shuffles; every query's rows unchanged") {
     Seq("q01", "q02", "q44").foreach { q =>
-      val df = query(q)(single, sfDir)
+      val df = query(q)(spark, sfDir)
       df.collect()
       assert(wrapped(df) > 0, s"$q: no scan wrapped")
       assert(shuffles(df) == 0,
         s"$q still shuffles:\n${df.queryExecution.executedPlan}")
-      Caches.releaseAll(single)
+      Caches.releaseAll(spark)
     }
     Seq("q01", "q02", "q03", "q04", "q40", "q41", "q42", "q43", "q44", "q65")
       .foreach { q =>
         val expected = rows(query(q)(plain, sfDir))
         Caches.releaseAll(plain)
-        val got = rows(query(q)(single, sfDir))
-        Caches.releaseAll(single)
+        val got = rows(query(q)(spark, sfDir))
+        Caches.releaseAll(spark)
         assert(got == expected, s"$q: rows differ with the strategy")
       }
   }
@@ -83,8 +77,8 @@ class SingleSplitScanSpec extends SparkSpec {
   test("a two-file input keeps its exchanges; one file drops them") {
     def grouped(s: SparkSession, path: String) =
       s.read.parquet(path).groupBy(col("k")).agg(sum(col("v")).as("s"))
-    val one = grouped(single, writeParquet("one", 1000, 1))
-    val two = grouped(single, writeParquet("two", 1000, 2))
+    val one = grouped(spark, writeParquet("one", 1000, 1))
+    val two = grouped(spark, writeParquet("two", 1000, 2))
     assert(rows(one) == rows(two))
     assert(wrapped(one) == 1 && shuffles(one) == 0)
     assert(wrapped(two) == 0 && shuffles(two) > 0,
@@ -99,7 +93,7 @@ class SingleSplitScanSpec extends SparkSpec {
       s.read.parquet(small).as("a")
         .join(s.read.parquet(big).hint("merge").as("b"), col("a.v") === col("b.v"))
         .select(col("a.k"), col("a.v"), col("b.k").as("bk"))
-    val got = joined(single)
+    val got = joined(spark)
     assert(wrapped(got) == 1)
     assert(rows(got) == rows(joined(plain)))
     assert(shuffles(got) == 2,
@@ -108,10 +102,10 @@ class SingleSplitScanSpec extends SparkSpec {
 
   test("a stateful stream over one file keeps its N state partitions") {
     val src = writeParquet("stream", 1000, 1)
-    val nParts = single.conf.get("spark.sql.shuffle.partitions").toInt
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(nParts > 1)
     val counts = scala.collection.mutable.Map.empty[Long, Long]
-    val q = single.readStream.schema(single.read.parquet(src).schema)
+    val q = spark.readStream.schema(spark.read.parquet(src).schema)
       .parquet(src)
       .groupBy(col("k")).count()
       .writeStream.outputMode(OutputMode.Complete)
@@ -138,7 +132,7 @@ class SingleSplitScanSpec extends SparkSpec {
     try {
       spark.range(1000).select((col("id") % 7).as("k"), col("id").as("v"))
         .coalesce(1).write.bucketBy(1, "k").saveAsTable(table)
-      val bkt = single.table(table).groupBy(col("k")).count()
+      val bkt = spark.table(table).groupBy(col("k")).count()
       assert(bkt.queryExecution.sparkPlan
         .collect { case s: FileSourceScanExec => s }.nonEmpty)
       assert(wrapped(bkt) == 0)
@@ -152,10 +146,10 @@ class SingleSplitScanSpec extends SparkSpec {
     val dim = tempDir("dppdim") + "/dim"
     spark.range(20).select((col("id") % 7).cast("int").as("k"), col("id").as("v"))
       .coalesce(1).write.parquet(dim)
-    val fScan = single.read.parquet(fact)
+    val fScan = spark.read.parquet(fact)
     assert(wrapped(fScan.groupBy(col("p")).count()) == 1)
     val pruned = fScan
-      .join(single.read.parquet(dim).filter(col("v") === 3L), col("p") === col("k"))
+      .join(spark.read.parquet(dim).filter(col("v") === 3L), col("p") === col("k"))
     def hasDpp(s: FileSourceScanExec) = s.partitionFilters.exists(
       _.exists(_.isInstanceOf[
         org.apache.spark.sql.catalyst.expressions.DynamicPruning]))

@@ -24,18 +24,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The shipped session at 4 cores, with a warehouse that goes at exit. */
+  lazy val session: SparkSession = Sessions.local(4,
+    Seq("spark.sql.warehouse.dir" -> tempDir("graft-wh").toString))
+
+  /** A fresh temp directory, deleted with its contents at JVM exit. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    Caches.tempDirDeletedAtExit(prefix)
 }

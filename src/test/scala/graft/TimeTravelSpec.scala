@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{Erasure, Provenance}
@@ -25,7 +23,7 @@ class TimeTravelSpec extends SparkSpec {
   test("tie-break at equal timestamps: the highest version wins; " +
       "a recorded sidecar overrides the derived clock") {
     val root = Caches.trackTempDir(
-      Files.createTempDirectory("graft_asof_time_")).toString
+      SparkSpec.tempDir("graft_asof_time_")).toString
     val t0 = Provenance.CommitClock.ofBatch(5)
     // two versions of the SAME batch (a rewrite) — same derived ts
     mkVersion(root, "b0_5", Seq(1), None)

@@ -23,8 +23,7 @@ class UserErasureSpec extends SparkSpec {
   }
 
   test("retention retire is idempotent") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_retire_spec_").toString
+    val root = SparkSpec.tempDir("graft_retire_spec_").toString
     val ledgerRoot = s"$root/state"
     val ledger = new StreamingOps.VersionedLedger(spark, ledgerRoot,
       Some(root))

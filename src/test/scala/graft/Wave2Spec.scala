@@ -525,7 +525,7 @@ class Wave2Spec extends SparkSpec {
       (2L, "a b c d q r s"))       // abc bcd seen; cdq dqr qrs new → 0.6
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("novelty").toString
+    val dir = SparkSpec.tempDir("novelty").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.ngramNovelty(spark, dir).collect()
@@ -552,7 +552,7 @@ class Wave2Spec extends SparkSpec {
       (2L, "bb cc cc"))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("vocab").toString
+    val dir = SparkSpec.tempDir("vocab").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.vocabReport(spark, dir, topK = 2).collect()
@@ -580,7 +580,7 @@ class Wave2Spec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((0L, "aa aa bb", "en", "crafted", 8L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("hashvec").toString
+    val dir = SparkSpec.tempDir("hashvec").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val vec = operators.TextOps.hashingVectorizer(spark, dir)

@@ -7,16 +7,28 @@ import graft.operators._
 
 class Wave3Spec extends SparkSpec {
 
+  // The shared session carries RewriteHofDotProduct, which turns every
+  // HOF dot fold into the native kernel. Reference sides that must run
+  // the fold itself are built on this child session without the rule.
+  private lazy val plain = spark.newSession()
+
+  private def assertHofKept(df: org.apache.spark.sql.DataFrame): Unit = {
+    val optimized = df.queryExecution.optimizedPlan.toString.toLowerCase
+    assert(optimized.contains("zip_with"),
+      s"HOF reference was rewritten:\n$optimized")
+  }
+
   test("native dot product matches the HOF fold bit-for-bit") {
-    val emb = Similarity.unitVectors(spark, sfDir).limit(50)
+    val emb = Similarity.unitVectors(plain, sfDir).limit(50)
     val pairs = emb.select(col("vec_id").as("ia"), col("v").as("va"))
       .crossJoin(emb.select(col("vec_id").as("ib"), col("v").as("vb")))
       .filter(col("ia") < col("ib"))
-    val diff = pairs
+    val cmp = pairs
       .withColumn("hof", Similarity.dot(col("va"), col("vb")))
       .withColumn("native", dotNative(col("va"), col("vb")))
       .filter(col("hof") =!= col("native"))
-      .count()
+    assertHofKept(cmp)
+    val diff = cmp.count()
     assert(diff == 0)
   }
 
@@ -25,13 +37,14 @@ class Wave3Spec extends SparkSpec {
     // the HOF spec: per-element double cast, norm = sqrt of the
     // 0.0-seeded ascending squared-sum fold, per-element divide
     val v0 = transform(col("embedding"), x => x.cast("double"))
-    val diff = sources.Tables.embeddings(spark, sfDir)
+    val cmp = sources.Tables.embeddings(plain, sfDir)
       .select(col("vec_id"), col("embedding"), v0.as("v0"))
       .withColumn("nrm", Similarity.norm(col("v0")))
       .withColumn("hof", transform(col("v0"), x => x / col("nrm")))
       .withColumn("native", unitNative(col("embedding").cast("array<double>")))
       .filter(col("hof") =!= col("native"))
-      .count()
+    assertHofKept(cmp)
+    val diff = cmp.count()
     assert(diff == 0)
     // edge contract: empty array and null element poison to null;
     // an all-zero vector propagates NaN like the HOF divide
@@ -95,7 +108,7 @@ class Wave3Spec extends SparkSpec {
     assert(sources.Tables.parallelized(spark, one).rdd.getNumPartitions == p)
     // a corpus with >= cores files already scans parallel → SAME plan,
     // no extra exchange (reference equality: the input is returned)
-    val dir = java.nio.file.Files.createTempDirectory("graft_par").toString
+    val dir = SparkSpec.tempDir("graft_par").toString
     one.limit(64).repartition(p + 1).write.mode("overwrite").parquet(dir)
     val multi = spark.read.parquet(dir)
     assert(multi.inputFiles.length >= p)
@@ -223,17 +236,8 @@ class Wave3Spec extends SparkSpec {
     assert(diff == 0)
   }
 
-  // registration goes on a child session: it also installs a planner
-  // strategy, which must not change how later suites plan on the
-  // shared session
-  private lazy val registered = {
-    val s = spark.newSession()
-    org.apache.spark.sql.graft.GraftFunctions.register(s)
-    s
-  }
-
   test("optimizer rule rewrites the HOF dot idiom to the native kernel") {
-    val df = registered.range(1, 100)
+    val df = spark.range(1, 100)
       .select(col("id"),
         transform(sequence(lit(1), lit(16)), i => i.cast("double") * col("id"))
           .as("a"),
@@ -252,15 +256,21 @@ class Wave3Spec extends SparkSpec {
   }
 
   test("native dot matches HOF null semantics (ragged and null elements)") {
-    val rows = registered.sql(
-      """SELECT
-        |  aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, (acc, x) -> acc + x) AS hof,
-        |  dot_product(a, b) AS nat
-        |FROM VALUES
+    val values =
+      """FROM VALUES
         |  (array(1.0d, 2.0d), array(3.0d)),
         |  (array(1.0d, CAST(NULL AS DOUBLE)), array(3.0d, 4.0d)),
-        |  (array(1.0d, 2.0d), array(3.0d, 4.0d)) AS t(a, b)""".stripMargin)
-      .collect()
+        |  (array(1.0d, 2.0d), array(3.0d, 4.0d)) AS t(a, b)""".stripMargin
+    // a projection over VALUES folds to literals during optimization,
+    // so check the session rather than the plan
+    assert(!plain.experimental.extraOptimizations
+      .contains(org.apache.spark.sql.graft.RewriteHofDotProduct))
+    val hof = plain.sql(
+      "SELECT aggregate(zip_with(a, b, (x, y) -> x * y), 0.0d, " +
+        s"(acc, x) -> acc + x) AS hof $values")
+    val nat = spark.sql(s"SELECT dot_product(a, b) AS nat $values")
+    val rows = hof.collect().zip(nat.collect())
+      .map { case (h, n) => org.apache.spark.sql.Row(h.get(0), n.get(0)) }
     rows.foreach { r => assert(r.isNullAt(0) == r.isNullAt(1)) }
     assert(rows.count(_.isNullAt(1)) == 2)
     assert(rows.find(!_.isNullAt(1)).get.getDouble(1) == 11.0)
@@ -407,7 +417,7 @@ class Wave3Spec extends SparkSpec {
 
   test("ivf-oracled with nprobe = nlist equals exhaustive dot ranking") {
     import org.apache.spark.sql.expressions.Window
-    val emb = sources.Tables.embeddings(spark, sfDir)
+    val emb = sources.Tables.embeddings(plain, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -421,6 +431,7 @@ class Wave3Spec extends SparkSpec {
       .select(col("q_id"), col("rank").cast("long").as("rank"),
         col("vec_id").as("neighbor"), col("score"))
       .orderBy(col("q_id"), col("rank"))
+    assertHofKept(brute)
     val ivf = operators.Similarity.ivfOracled(spark, sfDir, nprobe = 4)
     assert(ivf.collect().toSeq == brute.collect().toSeq)
     Caches.releaseAll(spark)
@@ -429,7 +440,7 @@ class Wave3Spec extends SparkSpec {
   test("lsh-oracled equals the independent HOF bucket spelling") {
     val planes = Array.tabulate(6, 64)((p, d) =>
       operators.Similarity.mdNibbleVal(s"pl|$p|$d"))
-    val u = operators.Similarity.unitVectors(spark, sfDir)
+    val u = operators.Similarity.unitVectors(plain, sfDir)
     val bucket = (0 until 6).map { p =>
       when(operators.Similarity.dot(col("v"),
         typedLit(planes(p).toSeq)) > 0, lit(1L << p)).otherwise(lit(0L))
@@ -445,6 +456,7 @@ class Wave3Spec extends SparkSpec {
       .filter(col("cos") >= 0.4)
       .select(col("id_a"), col("id_b"), col("cos"))
       .orderBy(col("id_a"), col("id_b"))
+    assertHofKept(hof)
     val out = operators.Similarity.lshOracled(spark, sfDir)
     assert(out.collect().toSeq == hof.collect().toSeq)
     Caches.releaseAll(spark)
@@ -507,7 +519,7 @@ class Wave3Spec extends SparkSpec {
       (2L, "z"))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("bigram").toString
+    val dir = SparkSpec.tempDir("bigram").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.bigramLmScore(spark, dir).collect()
@@ -538,7 +550,7 @@ class Wave3Spec extends SparkSpec {
     val docs = Seq((0L, "aaaa aaaa ab"), (1L, "abab cd"))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = SparkSpec.tempDir("bpe").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.bpeMerges(spark, dir).collect()
@@ -577,7 +589,7 @@ class Wave3Spec extends SparkSpec {
     assert((0 until 4).map(sign(1, _)) == Seq(-1.0, 1.0, -1.0, 1.0))
     val emb = Seq((7L, Seq(1.0f, -2.0f, 0.5f, 0.25f), 0))
       .toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("rp").toString
+    val dir = SparkSpec.tempDir("rp").toString
     try {
       emb.write.parquet(s"$dir/embeddings.parquet")
       val got = operators.Similarity
@@ -603,7 +615,7 @@ class Wave3Spec extends SparkSpec {
     val df = docs.map { case (id, t, l) => (id, t, l, "crafted",
       t.length.toLong) }.toDF("doc_id", "text", "lang", "source",
       "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("tmix").toString
+    val dir = SparkSpec.tempDir("tmix").toString
     try {
       df.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.temperatureMix(spark, dir, target = 6)
@@ -642,7 +654,7 @@ class Wave3Spec extends SparkSpec {
         (i, if (i == eval) s"doc $train" else s"doc $i"))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("split").toString
+    val dir = SparkSpec.tempDir("split").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.datasetSplit(spark, dir).collect()
@@ -665,7 +677,7 @@ class Wave3Spec extends SparkSpec {
       (3L, "table table scan"))        // match at pos 1 only
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("phrase").toString
+    val dir = SparkSpec.tempDir("phrase").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.phraseSearch(spark, dir).collect()
@@ -683,7 +695,7 @@ class Wave3Spec extends SparkSpec {
     val docs = Seq((0L, "a b a"))
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("pmi").toString
+    val dir = SparkSpec.tempDir("pmi").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.cooccurrencePmi(spark, dir).collect()
@@ -709,7 +721,7 @@ class Wave3Spec extends SparkSpec {
       (4L, "e f g", "fr", "srcB"))
       .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("card").toString
+    val dir = SparkSpec.tempDir("card").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.corpusCard(spark, dir).collect()
@@ -752,7 +764,7 @@ class Wave3Spec extends SparkSpec {
         else if (i == held(1)) "z q" else "x"
       (i, t, "en", "crafted", t.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("ppl").toString
+    val dir = SparkSpec.tempDir("ppl").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.heldoutPerplexity(spark, dir).collect()
@@ -781,7 +793,7 @@ class Wave3Spec extends SparkSpec {
       (3L, long40 + " extra")) // keeper, quality (41 tokens)
       .map { case (id, t) => (id, t, "en", "crafted", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("funnel").toString
+    val dir = SparkSpec.tempDir("funnel").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = operators.TextOps.curationFunnel(spark, dir).collect()
@@ -808,7 +820,7 @@ class Wave3Spec extends SparkSpec {
       (3L, Seq(0.0f, 0.1f, 0.9f), 1),
       (4L, Seq(1.0f, 0.05f, 0.0f), 1))
       .toDF("vec_id", "embedding", "label")
-    val dir = java.nio.file.Files.createTempDirectory("knn").toString
+    val dir = SparkSpec.tempDir("knn").toString
     try {
       emb.write.parquet(s"$dir/embeddings.parquet")
       val got = operators.Similarity.knnLooEval(spark, dir).collect()
@@ -1229,7 +1241,7 @@ class Wave3Spec extends SparkSpec {
     // — the drained top-k must equal the one-shot batch q147 answer on
     // the union corpus
     import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val dir = JFiles.createTempDirectory("ws_stream").toString
+    val dir = SparkSpec.tempDir("ws_stream").toString
     try {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       def shard(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
@@ -1356,7 +1368,7 @@ class Wave3Spec extends SparkSpec {
       (1L, perm, "en", "s0", perm.length.toLong),
       (2L, other, "en", "s1", other.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("mediand").toString
+    val dir = SparkSpec.tempDir("mediand").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       assert(orig != perm, "permutation must change the byte stream")

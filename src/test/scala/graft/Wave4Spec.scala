@@ -326,8 +326,7 @@ class Wave4Spec extends SparkSpec {
     "the from-scratch clustering") {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_iccsplit_").toString
+    val root = SparkSpec.tempDir("graft_iccsplit_").toString
     try {
       for (b <- 0 until 3) {
         val tmp = s"$root/_w"
@@ -466,8 +465,7 @@ class Wave4Spec extends SparkSpec {
     val bounds = ev.select(col("ts")).collect().map(_.get(0))
     val n = bounds.length
     val (t1, t2) = (bounds(n / 3), bounds(2 * n / 3))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_scd2split_").toString
+    val root = SparkSpec.tempDir("graft_scd2split_").toString
     try {
       val parts = Seq(
         ev.filter(col("ts") < lit(t1)),

@@ -139,8 +139,7 @@ class Wave5Spec extends SparkSpec {
     val bounds = ev.select(col("ts")).collect().map(_.get(0))
     val n = bounds.length
     val (t1, t2) = (bounds(n / 3), bounds(2 * n / 3))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sattrsplit_").toString
+    val root = SparkSpec.tempDir("graft_sattrsplit_").toString
     try {
       val parts = Seq(
         ev.filter(col("ts") < lit(t1)),
@@ -454,8 +453,7 @@ class Wave5Spec extends SparkSpec {
     val bounds = ev.select(col("ts")).collect().map(_.get(0))
     val n = bounds.length
     val (t1, t2) = (bounds(n / 3), bounds(2 * n / 3))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sewmasplit_").toString
+    val root = SparkSpec.tempDir("graft_sewmasplit_").toString
     try {
       val parts = Seq(
         ev.filter(col("ts") < lit(t1)),
@@ -545,8 +543,7 @@ class Wave5Spec extends SparkSpec {
       .select(col("ts")).collect().map(_.get(0))
     val n = bounds.length
     val (t1, t2) = (bounds(n / 3), bounds(2 * n / 3))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_shhsplit_").toString
+    val root = SparkSpec.tempDir("graft_shhsplit_").toString
     try {
       val parts = Seq(
         ev.filter(col("ts") < lit(t1)),

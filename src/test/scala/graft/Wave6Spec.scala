@@ -48,8 +48,7 @@ class Wave6Spec extends SparkSpec {
     Caches.releaseAll(spark)
     // split the fixture corpus across 3 stream files, 1 per trigger
     val docs = graft.sources.Tables.documents(spark, sfDir).collect()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_hllsplit_").toString
+    val root = SparkSpec.tempDir("graft_hllsplit_").toString
     def writeFlat(part: Int): Unit = {
       val tmp = s"$root/_w"
       val slice = docs.zipWithIndex.filter(_._2 % 3 == part).map(_._1)
@@ -81,8 +80,7 @@ class Wave6Spec extends SparkSpec {
 
   test("q225: the persisted window artifact is written once and read " +
     "thereafter, matching the in-memory path") {
-    val tableDir = java.nio.file.Files
-      .createTempDirectory("graft_wintab_spec_").toString + "/windows"
+    val tableDir = SparkSpec.tempDir("graft_wintab_spec_").toString + "/windows"
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_dup_windows"),
         r.getAs[String]("kept_md5"))).toSet
@@ -114,8 +112,7 @@ class Wave6Spec extends SparkSpec {
     val batch = rows(Dedup.sourceOverlapSketch(spark, sfDir))
     Caches.releaseAll(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir).collect()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_kmvsplit_").toString
+    val root = SparkSpec.tempDir("graft_kmvsplit_").toString
     def writeFlat(part: Int): Unit = {
       val tmp = s"$root/_w"
       val slice = docs.zipWithIndex.filter(_._2 % 3 == part).map(_._1)
@@ -153,8 +150,7 @@ class Wave6Spec extends SparkSpec {
     val batch = rows(TextOps.bm25TopK(spark, sfDir))
     Caches.releaseAll(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir).collect()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_bm25split_").toString
+    val root = SparkSpec.tempDir("graft_bm25split_").toString
     def writeFlat(part: Int): Unit = {
       val tmp = s"$root/_w"
       val slice = docs.zipWithIndex.filter(_._2 % 3 == part).map(_._1)
@@ -194,8 +190,7 @@ class Wave6Spec extends SparkSpec {
       (3L, dup, "en", "s", dup.length.toLong), // same-lang copy: no pair
       (4L, "other text entirely", "fr", "s", 19L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_xlang_").toString
+    val dir = SparkSpec.tempDir("graft_xlang_").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = Dedup.crossLingualDupMatrix(spark, dir).collect()
@@ -241,8 +236,7 @@ class Wave6Spec extends SparkSpec {
     val batch = rows(Multimodal.frameFeaturesAgg(spark, sfDir))
     Caches.releaseAll(spark)
     val docs = graft.sources.Tables.documents(spark, sfDir).collect()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_framesplit_").toString
+    val root = SparkSpec.tempDir("graft_framesplit_").toString
     def writeFlat(part: Int): Unit = {
       val tmp = s"$root/_w"
       val slice = docs.zipWithIndex.filter(_._2 % 3 == part).map(_._1)
@@ -309,8 +303,7 @@ class Wave6Spec extends SparkSpec {
       (20 until 25).map(i =>
         (i.toLong, longDoc, "en", "allpass", 500L + i)))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lqcorr_").toString
+    val dir = SparkSpec.tempDir("graft_lqcorr_").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = TextOps.lengthQualityCorrelation(spark, dir).collect()
@@ -390,8 +383,7 @@ class Wave6Spec extends SparkSpec {
       (5L, shared, "en", "twinB", shared.length.toLong),
       (10L, only, "en", "loner", only.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_overlap_").toString
+    val dir = SparkSpec.tempDir("graft_overlap_").toString
     try {
       docs.write.parquet(s"$dir/documents.parquet")
       val got = Dedup.sourceOverlapSketch(spark, dir).collect()

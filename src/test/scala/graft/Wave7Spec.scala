@@ -12,7 +12,7 @@ import graft.streaming.{SimulatedCrash, StreamState, StreamingOps}
 class Wave7Spec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    SparkSpec.tempDir(tag).toString
 
   private def rmrf(p: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))

@@ -19,7 +19,7 @@ import graft.streaming.StreamingOps
 class Wave8Spec extends SparkSpec {
 
   private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    SparkSpec.tempDir(tag).toString
 
   private def rmrf(p: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p))
