@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ChildSessions
 
 import graft.sources.Tables
 
@@ -404,10 +405,14 @@ object Analytics {
     // over-parallelizes the loop (32 near-empty partitions ×2 joins
     // ×rounds was exactly the r18 scaling block's 8-core-beats-32
     // inversion). Integer rank sums are partitioning-invariant, so
-    // results are bit-identical at any width.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L,
-      math.min(n / 2000000L + 1L, prevShuffle.toLong)).toString
+    // results are bit-identical at any width. The loop runs on a child
+    // session at that width; the caller's session conf is untouched.
+    val loopParts = math.max(1L, math.min(n / 2000000L + 1L,
+      spark.conf.get("spark.sql.shuffle.partitions").toLong)).toString
+    val loop = ChildSessions.withConfs(spark,
+      Map("spark.sql.shuffle.partitions" -> loopParts))
+    val edgesL = ChildSessions.rebind(edgesWd, loop)
+    val nodesL = ChildSessions.rebind(nodes, loop)
     val sc = spark.sparkContext
     val reliable = checkpointMode == "reliable"
     // Loop shape (guide §1.2 step 1 + §3.1): the rank vector is
@@ -428,17 +433,16 @@ object Analytics {
     // checkpoint-truncated loop below, arithmetic unchanged
     // (spec-pinned bit-identical against an independent driver walk).
     val driverCap = 4000000L
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
+    val ranked =
       if (!reliable && n <= driverCap) {
-        val nodeKeys = nodes.as[(String, Long)].collect()
+        val nodeKeys = nodesL.as[(String, Long)].collect()
         var rank: Map[(String, Long), Long] =
           nodeKeys.iterator.map(_ -> scale / n).toMap
         for (_ <- 1 to rounds) {
           val ranksDf = rank.iterator
             .map { case ((t, id), r) => (t, id, r) }
             .toSeq.toDF("t", "id", "r")
-          val sums = edgesWd
+          val sums = edgesL
             .join(broadcast(ranksDf),
               col("st") === col("t") && col("sid") === col("id"))
             .groupBy(col("dt").as("t2"), col("did").as("id2"))
@@ -467,22 +471,22 @@ object Analytics {
         // diff and gets swept after round 2 — later rounds then
         // silently recompute the degree attach (measured ~6× the
         // cached cost per round)
-        edgesWd.count()
+        edgesL.count()
         // the per-round rank/sum vectors exit the checkpoint as
         // LogicalRDDs with no statistics — hint broadcast while the
         // vector provably fits (guide §3.1); a bigger graph keeps SMJ
         val hintSmall: DataFrame => DataFrame =
           if (n <= driverCap) broadcast else identity
-        var ranks = nodes.withColumn("r", lit(scale / n))
+        var ranks = nodesL.withColumn("r", lit(scale / n))
         var prevCkpt = Set.empty[Int]
         for (_ <- 1 to rounds) {
-          val sums = edgesWd
+          val sums = edgesL
             .join(hintSmall(ranks),
               col("st") === col("t") && col("sid") === col("id"))
             .groupBy(col("dt").as("t2"), col("did").as("id2"))
             .agg(sum(expr("r div deg")).as("s"))
           val before = sc.getPersistentRDDs.keySet.toSet
-          val next = nodes
+          val next = nodesL
             .join(hintSmall(sums),
               col("t") === col("t2") && col("id") === col("id2"), "left")
             .select(col("t"), col("id"),
@@ -499,7 +503,7 @@ object Analytics {
             (col("r").cast("double") / lit(1e12)).as("rank"))
           .orderBy(col("t"), col("id"))
       }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    ChildSessions.rebind(ranked, spark)
   }
 
   /** Daily trending table (q189): per day, the top-k event types by

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.operators.{Optimize, ZoneMap}
 import graft.sources.Tables
-import graft.streaming.LedgerArtifacts
+import graft.streaming.{LedgerArtifacts, StreamingOps}
 
 /** The graft lake table format's WRITER + manifest IO + the oracled
   * queries that drive [[LakeTableProvider]] (q507–q509, q521–q524,
@@ -1010,31 +1010,18 @@ object GraftLake {
           .write.format(classOf[LakeTableProvider].getName)
           .option("path", table).option("batchId", s"stream-$id")
           .mode("append").save()
-        val prevNoData = spark.conf
-          .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-        spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-        try {
-          val q = spark.readStream
-            .schema(StructType(Seq(
-              StructField("event_id", LongType),
-              StructField("ts", org.apache.spark.sql.types
-                .TimestampNTZType),
-              StructField("user_id", LongType))))
-            .option("maxFilesPerTrigger", "1")
-            .parquet(feed)
-            .writeStream
-            .outputMode(org.apache.spark.sql.streaming.OutputMode
-              .Append())
-            .foreachBatch { (b: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], id: Long) => sinkBatch(b, id) }
-            .trigger(org.apache.spark.sql.streaming.Trigger
-              .AvailableNow())
-            .option("checkpointLocation", s"$staging/_checkpoint")
-            .start()
-          q.awaitTermination()
-        } finally spark.conf.set(
-          "spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+        val feedStream = spark.readStream
+          .schema(StructType(Seq(
+            StructField("event_id", LongType),
+            StructField("ts", org.apache.spark.sql.types
+              .TimestampNTZType),
+            StructField("user_id", LongType))))
+          .option("maxFilesPerTrigger", "1")
+          .parquet(feed)
+        // one snapshot commit per feed file: no trailing no-data batch
+        StreamingOps.drain(feedStream, Some(staging), confs = Map(
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))(
+          sinkBatch)
         // the crash replay: micro-batch 0 re-submitted through the
         // SAME sink function — recognized by its batch id, no-ops
         sinkBatch(spark.read.parquet(feed).limit(0), 0L)
@@ -1923,27 +1910,21 @@ object GraftLake {
       .orderBy(col("case_id"))
   }
 
-  /** Drain a lake streaming read to completion (AvailableNow),
-    * folding count + key mass driver-side; returns (rows, sumKeys,
-    * microBatches).
+  /** Drain a lake streaming read to completion, checkpointed under
+    * `root`, folding count + key mass driver-side; returns (rows,
+    * sumKeys, microBatches).
     */
-  private def drainLake(spark: SparkSession, df: DataFrame,
-      checkpoint: String): (Long, Long, Long) = {
+  private def drainLake(df: DataFrame,
+      root: String): (Long, Long, Long) = {
     var nRows = 0L
     var keyMass = 0L
     var nBatches = 0L
-    val q = df.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        val r = b.agg(count(lit(1)), sum(col("o_orderkey")))
-          .collect()(0)
-        nRows += r.getLong(0)
-        if (!r.isNullAt(1)) keyMass += r.getLong(1)
-        nBatches += 1
-      }
-      .start()
-    q.awaitTermination()
+    StreamingOps.drain(df, Some(root)) { (b, _) =>
+      val r = b.agg(count(lit(1)), sum(col("o_orderkey"))).collect()(0)
+      nRows += r.getLong(0)
+      if (!r.isNullAt(1)) keyMass += r.getLong(1)
+      nBatches += 1
+    }
     (nRows, keyMass, nBatches)
   }
 
@@ -1955,12 +1936,12 @@ object GraftLake {
   def lakeStreamSource(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = ensureWriteTable(spark, dir)
-    val checkpoint = graft.Caches.trackTempDir(java.nio.file.Files
-      .createTempDirectory("graft_lake_src_")).toString + "/cp"
+    val cpRoot = graft.Caches.trackTempDir(java.nio.file.Files
+      .createTempDirectory("graft_lake_src_")).toString
     val stream = spark.readStream
       .format(classOf[LakeTableProvider].getName)
       .option("path", root).load()
-    val (rows, sumOk, batches) = drainLake(spark, stream, checkpoint)
+    val (rows, sumOk, batches) = drainLake(stream, cpRoot)
     Seq((rows, sumOk, if (batches >= 1L) 1L else 0L))
       .toDF("n_rows", "sum_ok", "drained")
   }
@@ -1992,13 +1973,12 @@ object GraftLake {
         .option("path", root).option("batchId", id)
         .mode("append").save()
     append(col("o_orderkey") < step, "rs-b0")
-    val checkpoint = s"$base/cp"
     def stream = spark.readStream
       .format(classOf[LakeTableProvider].getName)
       .option("path", root).load()
-    val p1 = drainLake(spark, stream, checkpoint)
+    val p1 = drainLake(stream, base)
     append(col("o_orderkey") >= step, "rs-b1")
-    val p2 = drainLake(spark, stream, checkpoint)
+    val p2 = drainLake(stream, base)
     Seq((1L, p1._1, p1._2), (2L, p2._1, p2._2))
       .toDF("phase", "n_rows", "sum_ok")
       .orderBy(col("phase"))

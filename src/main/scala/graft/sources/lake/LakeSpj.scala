@@ -186,23 +186,17 @@ object LakeSpj {
       .orderBy(col("probe_id"))
   }
 
-  /** Run `f` under the SPJ plan regime (v2 bucketing on, broadcast
-    * off, subset cluster keys allowed), restoring every conf after —
-    * queries outside this block plan exactly as before.
+  /** Run `f` on a child session under the SPJ plan regime (v2
+    * bucketing on, broadcast off, subset cluster keys allowed). The
+    * caller's session conf is never written, so queries planned on it
+    * meanwhile, from any thread, keep their broadcasts.
     */
   private def withSpjConfs[T](spark: SparkSession,
-      bucketing: Boolean)(f: => T): T = {
-    val kvs = Map(
+      bucketing: Boolean)(f: SparkSession => T): T =
+    f(org.apache.spark.sql.graft.ChildSessions.withConfs(spark, Map(
       "spark.sql.sources.v2.bucketing.enabled" -> bucketing.toString,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")
-    val old = kvs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false")))
 
   /** Shuffle-exchange count in the plan Spark prepared for `df`. */
   private def countShuffles(df: DataFrame): Long = {
@@ -240,16 +234,13 @@ object LakeSpj {
     val factRoot = ensureFactTable(spark, dir)
     val nDays = GraftLake.readMeta(factRoot).files
       .flatMap(_.pval).distinct.length.toLong
-    val (spjShuffles, spjRows) = withSpjConfs(spark, bucketing = true) {
-      val j = freshJoin(spark, dir)
+    def plan(bucketing: Boolean) = withSpjConfs(spark, bucketing) { spj =>
+      val j = freshJoin(spj, dir)
       val n = j.count()
       (countShuffles(j), n)
     }
-    val (ctlShuffles, ctlRows) = withSpjConfs(spark, bucketing = false) {
-      val j = freshJoin(spark, dir)
-      val n = j.count()
-      (countShuffles(j), n)
-    }
+    val (spjShuffles, spjRows) = plan(bucketing = true)
+    val (ctlShuffles, ctlRows) = plan(bucketing = false)
     Seq(("1_spj", nDays, spjShuffles, spjRows),
       ("2_shuffled", nDays, ctlShuffles, ctlRows))
       .toDF("mode", "n_day_partitions", "n_shuffles", "n_rows")
@@ -264,8 +255,8 @@ object LakeSpj {
     */
   def lakeSpjRollup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val rows = withSpjConfs(spark, bucketing = true) {
-      val j = freshJoin(spark, dir)
+    val rows = withSpjConfs(spark, bucketing = true) { spj =>
+      val j = freshJoin(spj, dir)
       val rollup = j
         .groupBy((col("day") % 7L).as("weekday"))
         .agg(count(lit(1)).as("n_events"),

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.Similarity
@@ -103,31 +102,17 @@ object AnnMaintenance {
     val ledgerRoot = s"$root/state"
     val ledger =
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
-    val stream = spark.readStream
-      .schema(StructType(Seq(
+    val stream = StreamingOps.streamParquet(spark, StructType(Seq(
         StructField("doc_id", LongType),
         StructField("embedding", ArrayType(FloatType)),
-        StructField("label", IntegerType))))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val rows = Erasure.applyTombstones(ss, ledgerRoot,
-            assign(batch.select(col("doc_id").as("vec_id"),
-              col("embedding").cast("array<double>").as("v")), cent),
-            keyCol = "vec_id")
-          val merged =
-            if (ledger.isEmpty) rows
-            else ss.read.parquet(ledger.path).unionByName(rows)
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+        StructField("label", IntegerType))),
+      streamDir, "*.parquet", Some(1))
+    StreamingOps.drain(stream, Some(root)) { (batch, id) =>
+      ledger.fold(id, Erasure.applyTombstones(batch.sparkSession,
+        ledgerRoot, assign(batch.select(col("doc_id").as("vec_id"),
+          col("embedding").cast("array<double>").as("v")), cent),
+        keyCol = "vec_id"))()
+    }
     Erasure.erase(spark, ledgerRoot,
       Tables.embeddings(spark, dir)
         .filter(col("vec_id") % mod === 0).select(col("vec_id")),

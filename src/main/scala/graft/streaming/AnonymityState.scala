@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.graft.ChildSessions
 import org.apache.spark.sql.types._
 
 import graft.operators.Anonymity
@@ -56,9 +56,8 @@ object AnonymityState {
       Anonymity.customers(spark, dir).select(cols.map(col): _*), cols)
     LedgerArtifacts.sharedTable(spark,
       s"kanon_cells_${LedgerArtifacts.dirKey(dir)}",
-      s"${fp._1}_${fp._2}")(
-      StreamingOps.atStateParallelism(spark)(
-        drainedCellsLive(spark, dir)))
+      s"${fp._1}_${fp._2}")(drainedCellsLive(
+      ChildSessions.withConfs(spark, StreamingOps.StateWidth), dir))
   }
 
   private def drainedCellsLive(spark: SparkSession,
@@ -73,27 +72,11 @@ object AnonymityState {
       Some(root))
     val keys = Seq("nation", "region", "segment", "b1000", "b2500",
       "b5000")
-    val stream = spark.readStream.schema(custSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val cells = Anonymity.qiCellsOf(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) cells
-            else ss.read.parquet(ledger.path)
-              .unionByName(cells)
-              .groupBy(keys.map(col): _*)
-              .agg(sum(col("cnt")).as("cnt"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    StreamingOps.drain(StreamingOps.streamParquet(spark, custSchema,
+        streamDir, "*.parquet", Some(1)), Some(root)) { (batch, id) =>
+      ledger.fold(id, Anonymity.qiCellsOf(batch))(
+        _.groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt")))
+    }
     spark.read.parquet(ledger.path)
   }
 

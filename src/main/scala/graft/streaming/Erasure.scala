@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
@@ -65,13 +64,6 @@ object Erasure {
   private val ErasureMod = 37
 
   private[streaming] def erasedPred = col("doc_id") % ErasureMod === 0
-
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   // ---------------------------------------------------------------
   // tombstones
@@ -413,31 +405,24 @@ object Erasure {
     val ledgerRoot = s"$root/state"
     val ledger =
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
-    val stream = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val rows = applyTombstones(ss, ledgerRoot,
-            batch.select(col("doc_id"), col("source"), col("n_chars")))
-          val merged =
-            if (ledger.isEmpty) rows
-            else ss.read.parquet(ledger.path).unionByName(rows)
-          // an append fold's change set IS the folded batch (all
-          // inserts — id ranges are disjoint); committed atomically
-          // with the version so the CDF reads metadata (q452/q486)
-          ledger.writeWithChangeset(merged, id,
-            rows.withColumn("change_type", lit("insert"))
-              .select(col("change_type"), col("doc_id"), col("source"),
-                col("n_chars")))
-        }
-        ()
+    StreamingOps.drain(StreamingOps.streamDocuments(spark, streamDir,
+        "*.parquet", Some(1)), Some(root)) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (!ledger.isReplayed(id)) {
+        val rows = applyTombstones(ss, ledgerRoot,
+          batch.select(col("doc_id"), col("source"), col("n_chars")))
+        val merged =
+          if (ledger.isEmpty) rows
+          else ss.read.parquet(ledger.path).unionByName(rows)
+        // an append fold's change set IS the folded batch (all
+        // inserts — id ranges are disjoint); committed atomically
+        // with the version so the CDF reads metadata (q452/q486)
+        ledger.writeWithChangeset(merged, id,
+          rows.withColumn("change_type", lit("insert"))
+            .select(col("change_type"), col("doc_id"), col("source"),
+              col("n_chars")))
       }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    }
     ()
   }
 

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
@@ -49,13 +48,6 @@ import graft.sources.Tables
   * per corpus as a shared artifact and every consumer reads it.
   */
 object GatedCommit {
-
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   /** One catalog row: (rule_id, severity, kind, threshold). `kind`
     * names the violation predicate family; `threshold` parameterizes
@@ -143,68 +135,55 @@ object GatedCommit {
       .write.mode("overwrite").parquet(s"$rulesRoot/b0_0")
     catalogDf(spark, CatalogV1).coalesce(1)
       .write.mode("overwrite").parquet(s"$rulesRoot/b1_1")
-    val stream = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          // the catalog IN FORCE at this position: highest committed
-          // catalog version with effective-from ≤ id
-          val (cv, _, cpath) = Provenance
-            .committedVersions(ss, rulesRoot)
-            .filter(_._2 <= id).maxBy(_._1)
-          val rules = ss.read.parquet(cpath).collect()
-            .map(r => (r.getString(0), r.getString(1), r.getString(2),
-              r.getLong(3)))
-            .sortBy(_._1)
-          val errs = rules.filter(_._2 == "error")
-          val warnsR = rules.filter(_._2 == "warn")
-          // first violated error rule, in rule-id order
-          val ruleCol = errs.foldRight(lit(null).cast("string")) {
-            case ((rid, _, kind, th), acc) =>
-              when(violates(kind, th), rid).otherwise(acc)
-          }
-          // annotations: every tripped warn rule, comma-joined
-          val warnCol = concat_ws(",", warnsR.map {
-            case (rid, _, kind, th) =>
-              when(violates(kind, th), rid).otherwise(lit(null))
-          }: _*)
-          val rows = batch
-            .select(col("doc_id"), col("source"), col("n_chars"),
-              col("lang"))
-            .withColumn("rule", ruleCol)
-          val ok = rows.filter(col("rule").isNull)
-            .withColumn("warns", warnCol)
-            .select(col("doc_id"), col("source"), col("n_chars"),
-              col("warns"))
-          val bad = rows.filter(col("rule").isNotNull)
-            .withColumn("catalog_version", lit(cv))
-            .select(col("doc_id"), col("source"), col("n_chars"),
-              col("rule"), col("catalog_version"))
-          val merged =
-            if (ledger.isEmpty) ok
-            else ss.read.parquet(ledger.path).unionByName(ok)
-          val deadMerged =
-            if (dead.isEmpty) bad
-            else ss.read.parquet(dead.path).unionByName(bad)
-          // QUARANTINE-FIRST (the tombstone-first discipline): the
-          // replay gate keys off the STATE ledger, so the dead-letter
-          // version must exist before the state version commits — a
-          // crash between the two writes then re-runs the whole fold
-          // (state not committed), with the dead side's own replay
-          // guard keeping its trail single-versioned. The reverse
-          // order would mark the batch replayed with its quarantine
-          // lost forever.
-          if (!dead.isReplayed(id)) dead.write(deadMerged, id)
-          ledger.write(merged, id)
+    StreamingOps.drain(StreamingOps.streamDocuments(spark, streamDir,
+        "*.parquet", Some(1)), Some(root)) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (!ledger.isReplayed(id)) {
+        // the catalog IN FORCE at this position: highest committed
+        // catalog version with effective-from ≤ id
+        val (cv, _, cpath) = Provenance
+          .committedVersions(ss, rulesRoot)
+          .filter(_._2 <= id).maxBy(_._1)
+        val rules = ss.read.parquet(cpath).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getString(2),
+            r.getLong(3)))
+          .sortBy(_._1)
+        val errs = rules.filter(_._2 == "error")
+        val warnsR = rules.filter(_._2 == "warn")
+        // first violated error rule, in rule-id order
+        val ruleCol = errs.foldRight(lit(null).cast("string")) {
+          case ((rid, _, kind, th), acc) =>
+            when(violates(kind, th), rid).otherwise(acc)
         }
-        ()
+        // annotations: every tripped warn rule, comma-joined
+        val warnCol = concat_ws(",", warnsR.map {
+          case (rid, _, kind, th) =>
+            when(violates(kind, th), rid).otherwise(lit(null))
+        }: _*)
+        val rows = batch
+          .select(col("doc_id"), col("source"), col("n_chars"),
+            col("lang"))
+          .withColumn("rule", ruleCol)
+        val ok = rows.filter(col("rule").isNull)
+          .withColumn("warns", warnCol)
+          .select(col("doc_id"), col("source"), col("n_chars"),
+            col("warns"))
+        val bad = rows.filter(col("rule").isNotNull)
+          .withColumn("catalog_version", lit(cv))
+          .select(col("doc_id"), col("source"), col("n_chars"),
+            col("rule"), col("catalog_version"))
+        // QUARANTINE-FIRST (the tombstone-first discipline): the
+        // replay gate keys off the STATE ledger, so the dead-letter
+        // version must exist before the state version commits — a
+        // crash between the two writes then re-runs the whole fold
+        // (state not committed), with the dead side's own replay
+        // guard keeping its trail single-versioned. The reverse
+        // order would mark the batch replayed with its quarantine
+        // lost forever.
+        dead.fold(id, bad)()
+        ledger.fold(id, ok)()
       }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    }
     ()
   }
 

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
@@ -135,13 +134,6 @@ object Provenance {
       candidates.maxBy(_._1)._1)
   }
 
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** All COMMITTED versions under a versioned-ledger root, in version
     * order: (version, source micro-batch id, path). Uncommitted dirs
     * (no `_SUCCESS` — a crash mid-write) are excluded, mirroring
@@ -234,36 +226,16 @@ object Provenance {
     val ledgerRoot = s"$root/state"
     val ledger =
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
-    val stream = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bc = stat(batch.toDF())
-          val bCells =
-            if (firstBatchCol) bc.withColumn("first_batch", lit(id))
-            else bc
-          val merged =
-            if (ledger.isEmpty) bCells
-            else {
-              val aggs =
-                if (firstBatchCol)
-                  Seq(sum(col("cnt")).as("cnt"),
-                    min(col("first_batch")).as("first_batch"))
-                else Seq(sum(col("cnt")).as("cnt"))
-              ss.read.parquet(ledger.path).unionByName(bCells)
-                .groupBy(keys.map(col): _*)
-                .agg(aggs.head, aggs.tail: _*)
-            }
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    val aggs = sum(col("cnt")).as("cnt") +:
+      (if (firstBatchCol) Seq(min(col("first_batch")).as("first_batch"))
+      else Nil)
+    StreamingOps.drain(StreamingOps.streamDocuments(spark, streamDir,
+        "*.parquet", Some(1)), Some(root)) { (batch, id) =>
+      ledger.fold(id,
+        if (firstBatchCol) stat(batch).withColumn("first_batch", lit(id))
+        else stat(batch))(
+        _.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*))
+    }
     ()
   }
 

@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
@@ -37,13 +36,6 @@ import graft.sources.Tables
   */
 object SchemaEvolution {
 
-  private val docsSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** The widen-and-backfill merge: union schema, NULL backfill on
     * whichever side is narrower — tolerant in BOTH directions (a
     * resumed fold reading an old narrow batch after the widening must
@@ -66,29 +58,22 @@ object SchemaEvolution {
     val ledgerRoot = s"$root/state"
     val ledger =
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
-    val stream = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val base = batch.select(col("doc_id"), col("source"),
-            col("n_chars"))
-          // the planted upstream drift: batch 1 onward ships `rev`
-          val rows =
-            if (id >= 1) base.withColumn("rev", col("doc_id") % 5)
-            else base
-          val merged =
-            if (ledger.isEmpty) rows
-            else widenMerge(ss.read.parquet(ledger.path), rows)
-          ledger.write(merged, id)
-        }
-        ()
+    StreamingOps.drain(StreamingOps.streamDocuments(spark, streamDir,
+        "*.parquet", Some(1)), Some(root)) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (!ledger.isReplayed(id)) {
+        val base = batch.select(col("doc_id"), col("source"),
+          col("n_chars"))
+        // the planted upstream drift: batch 1 onward ships `rev`
+        val rows =
+          if (id >= 1) base.withColumn("rev", col("doc_id") % 5)
+          else base
+        val merged =
+          if (ledger.isEmpty) rows
+          else widenMerge(ss.read.parquet(ledger.path), rows)
+        ledger.write(merged, id)
       }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    }
     val (_, _, path) = Provenance.committedVersions(spark, ledgerRoot)
       .last
     (spark.read.parquet(path), ledgerRoot)
@@ -179,38 +164,31 @@ object SchemaEvolution {
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
     val renameCounts =
       new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    val stream = spark.readStream.schema(docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          // the planted upstream drift: batch 1+ renames source→src,
-          // batch 2 ships n_chars widened to long (0–1 ship int —
-          // the fixture values fit int exactly)
-          val shaped =
-            if (id == 0L)
-              batch.select(col("doc_id"), col("source"),
-                col("n_chars").cast("int").as("n_chars"))
-            else if (id == 1L)
-              batch.select(col("doc_id"), col("source").as("src"),
-                col("n_chars").cast("int").as("n_chars"))
-            else
-              batch.select(col("doc_id"), col("source").as("src"),
-                col("n_chars"))
-          val (rows, nRenamed) = applyRenames(shaped.toDF())
-          renameCounts.put(id, nRenamed)
-          val merged =
-            if (ledger.isEmpty) rows
-            else widenMerge(ss.read.parquet(ledger.path), rows)
-          ledger.write(merged, id)
-        }
-        ()
+    StreamingOps.drain(StreamingOps.streamDocuments(spark, streamDir,
+        "*.parquet", Some(1)), Some(root)) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (!ledger.isReplayed(id)) {
+        // the planted upstream drift: batch 1+ renames source→src,
+        // batch 2 ships n_chars widened to long (0–1 ship int —
+        // the fixture values fit int exactly)
+        val shaped =
+          if (id == 0L)
+            batch.select(col("doc_id"), col("source"),
+              col("n_chars").cast("int").as("n_chars"))
+          else if (id == 1L)
+            batch.select(col("doc_id"), col("source").as("src"),
+              col("n_chars").cast("int").as("n_chars"))
+          else
+            batch.select(col("doc_id"), col("source").as("src"),
+              col("n_chars"))
+        val (rows, nRenamed) = applyRenames(shaped.toDF())
+        renameCounts.put(id, nRenamed)
+        val merged =
+          if (ledger.isEmpty) rows
+          else widenMerge(ss.read.parquet(ledger.path), rows)
+        ledger.write(merged, id)
       }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    }
     val (_, _, path) = Provenance.committedVersions(spark, ledgerRoot)
       .last
     import scala.jdk.CollectionConverters._

@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ChildSessions, SessionHygiene}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
@@ -72,15 +73,22 @@ class UserActivityProcessor
   * keyed state → sink. `Trigger.AvailableNow` drains the backlog exactly
   * once, which is the cron-batch contract.
   *
-  * Sink discipline: the registered queries write through `foreachBatch`
-  * into an executor-side parquet append (one delta file set per
-  * micro-batch, tagged with `batch_id`), and the final state is
-  * reconstructed by a DISTRIBUTED batch read — latest batch wins per
-  * key. Nothing ever materializes on the driver; a memory sink (which
-  * collects every snapshot into driver memory per trigger) appears only
-  * in tests. At cluster scale the same shape backs a Delta/Iceberg
-  * upsert sink; plain parquet-append + last-writer-wins keeps it
-  * dependency-free here.
+  * One drain: every stream in the engine runs through [[StreamingOps.drain]],
+  * which owns the `foreachBatch` sink, the trigger, the checkpoint under
+  * the operator's durable root and the state-store release. A drain that
+  * needs its own confs gets them on a child session; query code never
+  * writes the session's conf, so concurrent queries on one session plan
+  * as they would alone.
+  *
+  * Sink discipline: the micro-batches write executor-side — a parquet
+  * append per batch (the delta sinks, tagged with `batch_id`, read back
+  * latest-batch-wins per key by a DISTRIBUTED batch read), a compacted
+  * state table, or a gated versioned ledger
+  * ([[StreamingOps.VersionedLedger.fold]]). Nothing ever materializes on
+  * the driver; a memory sink (which collects every snapshot into driver
+  * memory per trigger) appears only in tests. At cluster scale the same
+  * shape backs a Delta/Iceberg upsert sink; plain parquet-append +
+  * last-writer-wins keeps it dependency-free here.
   */
 object StreamingOps {
 
@@ -124,39 +132,58 @@ object StreamingOps {
     root.map(r => s"$r/$name").getOrElse(graft.Caches.trackTempDir(
       Files.createTempDirectory(s"graft_${name}_")).toString)
 
-  /** Start a stream with the operator's durable checkpoint when a root
-    * is configured — a restarted AvailableNow drain then resumes from
-    * the file-source offsets instead of re-reading every input file.
-    * The checkpoint alone is NOT what makes versioned-ledger resume
-    * exact: a crash after a version commit but before the checkpoint's
-    * batch commit replays that batch, and [[VersionedLedger.isReplayed]]
-    * is the gate that keeps the replay from being folded twice.
+  /** Drain `stream` once with `Trigger.AvailableNow`: every micro-batch
+    * goes to `perBatch` through `foreachBatch`, and the call returns
+    * when the backlog is done. This is the cron-fired batch of the
+    * reference, and every drain in the engine goes through here.
+    *
+    * With a durable `root` the checkpoint is `<root>/_checkpoint`, so a
+    * restarted drain resumes from the file-source offsets instead of
+    * re-reading every input file. The checkpoint alone is NOT what makes
+    * versioned-ledger resume exact: a crash after a version commit but
+    * before the checkpoint's batch commit replays that batch, and
+    * [[VersionedLedger.isReplayed]] is the gate that keeps the replay
+    * from being folded twice.
+    *
+    * `confs` hold for this drain only. They go on a child session
+    * ([[org.apache.spark.sql.graft.ChildSessions]]) that the stream's
+    * plan is rebound to; the caller's session conf is never written, so
+    * a query planned concurrently on it is unaffected. Micro-batches run
+    * on a clone of that child, so the confs reach `perBatch`'s own plans
+    * too.
+    *
+    * The state-store providers a stateful stream leaves loaded
+    * (HDFS-map heap, RocksDB native memory — see SessionHygiene) are
+    * released with the query's other residue at [[graft.Caches]]
+    * release.
     */
-  private[streaming] def startWithCheckpoint(
-      w: org.apache.spark.sql.streaming.DataStreamWriter[Row],
-      root: Option[String]): org.apache.spark.sql.streaming.StreamingQuery =
+  private[graft] def drain(stream: DataFrame, root: Option[String],
+      mode: OutputMode = OutputMode.Append(),
+      confs: Map[String, String] = Map.empty)(
+      perBatch: (DataFrame, Long) => Unit): Unit = {
+    graft.Caches.onRelease(() => SessionHygiene.unloadStateStores())
+    val df =
+      if (confs.isEmpty) stream
+      else ChildSessions.rebind(stream,
+        ChildSessions.withConfs(stream.sparkSession, confs))
+    val w = df.writeStream
+      .outputMode(mode)
+      .foreachBatch(perBatch)
+      .trigger(Trigger.AvailableNow())
     root.fold(w)(r => w.option("checkpointLocation", s"$r/_checkpoint"))
-      .start()
-
-  /** Run a one-shot drain at STATE-sized shuffle parallelism (the
-    * documented `runToDeltaSink` knob extended per-drain, r18 verdict
-    * #7): the gated-ledger folds aggregate each micro-batch to REPORT
-    * grain (cells/users/sessions — never event grain), so the session
-    * shuffle width — sized for corpus scans — spends more on empty
-    * reduce partitions than on the fold (the r18 A/B: funnel family
-    * +5–15% at small width; the compute-heavy band-join drains, which
-    * genuinely use the cores, deliberately do NOT go through this).
-    * The streaming query captures the session conf at start(), so the
-    * save/restore brackets the whole drain; on a real cluster this is
-    * the knob you SIZE to state volume.
-    */
-  private[streaming] def atStateParallelism[A](spark: SparkSession,
-      parts: Int = 8)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      .start().awaitTermination()
   }
+
+  /** The shuffle width a drain's state fold runs at when it builds a
+    * shared artifact: the gated-ledger folds aggregate each micro-batch
+    * to REPORT grain (cells/users/sessions — never event grain), so the
+    * session width — sized for corpus scans — spends more on empty
+    * reduce partitions than on the fold (the r18 A/B: funnel family
+    * +5–15% at small width). On a real cluster this is the knob you
+    * SIZE to state volume.
+    */
+  private[streaming] val StateWidth =
+    Map("spark.sql.shuffle.partitions" -> "8")
 
   /** Latest existing COMMITTED version under a versioned-ledger root:
     * (max numeric suffix, its path, its source micro-batch id).
@@ -248,6 +275,20 @@ object StreamingOps {
       cur.set(next)
       lastBatch.set(math.max(lastBatch.get, id))
     }
+
+    /** The gated ledger fold for micro-batch `id`: unless the batch is
+      * a crash replay already folded in, write `delta` as the next
+      * version — as is on an empty ledger, else `merge` of the current
+      * version ∪ `delta` (read with `delta`'s session, the batch's).
+      * `delta` is built only when the batch folds.
+      */
+    def fold(id: Long, delta: => DataFrame)(
+        merge: DataFrame => DataFrame = identity): Unit =
+      if (!isReplayed(id)) {
+        val d = delta
+        write(if (isEmpty) d
+          else merge(d.sparkSession.read.parquet(path).unionByName(d)), id)
+      }
 
     /** Write the next version for micro-batch `id` with its typed
       * change rows committed ATOMICALLY beside it: state and
@@ -384,6 +425,35 @@ object StreamingOps {
     if (id > lastBatchId.get) lastBatchId.set(id)
   }
 
+  /** The documents table's columns, which every documents stream reads. */
+  private val docsSchema = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  /** The embeddings table's columns. */
+  private val embeddingsSchema = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
+
+  /** A parquet file stream of `schema` over the files in `dir` matching
+    * `sourceGlob`, at most `maxFilesPerTrigger` per micro-batch (a
+    * streaming file source needs its schema up front).
+    */
+  private[streaming] def streamParquet(spark: SparkSession,
+      schema: StructType, dir: String, sourceGlob: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream
+      .schema(schema)
+      .option("pathGlobFilter", sourceGlob)
+    maxFilesPerTrigger.foreach(m =>
+      reader.option("maxFilesPerTrigger", m.toString))
+    reader.parquet(dir)
+  }
+
   /** The events table as a file stream over `sourceDir` (default
     * `dir`; a file source needs a dir) of the files matching
     * `sourceGlob`, at most `maxFilesPerTrigger` per micro-batch, with
@@ -393,16 +463,38 @@ object StreamingOps {
       sourceGlob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None,
       sourceDir: Option[String] = None): DataFrame = {
-    // a streaming file source needs the schema up front — one footer read
-    // (driver-side, metadata only) pins the vintage-dependent ts type
+    // one footer read (driver-side, metadata only) pins the
+    // vintage-dependent ts type
     val tsType = Tables.rawEvents(spark, dir)
       .schema("ts").dataType // memoized footer (Tables.schemaMemo)
-    val reader = spark.readStream
-      .schema(eventsSchema(tsType))
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    Tables.normalizeTs(reader.parquet(sourceDir.getOrElse(dir)))
+    Tables.normalizeTs(streamParquet(spark, eventsSchema(tsType),
+      sourceDir.getOrElse(dir), sourceGlob, maxFilesPerTrigger))
+  }
+
+  /** The documents table as a file stream, with the same source
+    * parameters as [[streamEvents]].
+    */
+  def streamDocuments(spark: SparkSession, dir: String,
+      sourceGlob: String = "documents.parquet",
+      maxFilesPerTrigger: Option[Int] = None,
+      sourceDir: Option[String] = None): DataFrame =
+    streamParquet(spark, docsSchema, sourceDir.getOrElse(dir), sourceGlob,
+      maxFilesPerTrigger)
+
+  /** The one gated-ledger state drain: fold each micro-batch's `stat`
+    * into the versioned ledger `<root>/<table>` with `merge` (see
+    * [[VersionedLedger.fold]]) and return the drained state. `root` is
+    * the operator's durable root ([[effectiveRoot]] of `op`), so the
+    * ledger and the checkpoint resume together.
+    */
+  private def mergedState(spark: SparkSession, stream: DataFrame,
+      op: String, table: String, stateRoot: Option[String])(
+      stat: DataFrame => DataFrame)(
+      merge: DataFrame => DataFrame): DataFrame = {
+    val root = effectiveRoot(stateRoot, op)
+    val ledger = new VersionedLedger(spark, stateDir(root, table), root)
+    drain(stream, root) { (batch, id) => ledger.fold(id, stat(batch))(merge) }
+    spark.read.parquet(ledger.path)
   }
 
   /** Runs `df` as an Update-mode stream whose micro-batches append to a
@@ -415,53 +507,37 @@ object StreamingOps {
   private def runToDeltaSink(spark: SparkSession, df: DataFrame,
       tag: String,
       mode: OutputMode = OutputMode.Update,
-      root: Option[String] = None): DataFrame = {
-    // Both residues of a one-shot stream are handed to Caches for the
-    // post-consumption release: the parquet delta-sink dir (read
-    // lazily by the returned DataFrame, so it cannot be deleted here)
-    // and the state-store providers the stream leaves loaded
-    // (HDFS-map heap / RocksDB native memory — see SessionHygiene).
+      root: Option[String] = None,
+      confs: Map[String, String] = Map.empty): DataFrame = {
+    // The parquet delta-sink dir is read lazily by the returned
+    // DataFrame, so it is released with the query's caches, not here.
     // Under a durable root the sink and the streaming checkpoint (the
     // windowed/keyed STATE these operators keep lives in the
     // checkpoint's state store) both land there, untracked — a
     // restarted query resumes its state instead of re-aggregating.
     val sinkDir = stateDir(root, s"${tag}_sink")
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val out = df.withColumn("batch_id", lit(-1L))
-    // Stateful streaming cost is dominated by per-partition state-store
-    // instances; the state cardinality here (windows × types / user
-    // keys) is tiny relative to the shuffle default, so run the stream
-    // at a smaller state parallelism and restore the session setting
-    // after. On a real cluster this is the knob you SIZE to state
-    // volume (state ≫ partitions → raise it); each fresh temp
-    // checkpoint lets it differ per query.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevNoData = spark.conf
-      .get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    // the trailing no-data micro-batch advances the watermark and fires
-    // state timeouts; NOTHING here needs it — last-batch-wins
-    // reconstruction replaces timeout flushing (see streamingSessions:
-    // processing-time timeouts under a drain-once trigger loop no-data
-    // batches unboundedly), and skipping saves a plan+commit round
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val w = df.writeStream
-        .outputMode(mode)
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          batch.withColumn("batch_id", lit(id))
-            .write.mode("append").parquet(sinkDir)
-        }
-        .trigger(Trigger.AvailableNow())
-      val q = startWithCheckpoint(w, root)
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
+    drain(df, root, mode, SinkConfs ++ confs) { (batch, id) =>
+      batch.withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(sinkDir)
     }
-    spark.read.schema(out.schema).parquet(sinkDir)
+    spark.read.schema(df.withColumn("batch_id", lit(-1L)).schema)
+      .parquet(sinkDir)
   }
+
+  /** The delta-sink drains' own confs. Stateful streaming cost is
+    * dominated by per-partition state-store instances, and the state
+    * cardinality here (windows × types / user keys) is tiny beside the
+    * session's shuffle width, so the state runs 4 wide; on a real
+    * cluster this is the knob you SIZE to state volume. The trailing
+    * no-data micro-batch advances the watermark and fires state
+    * timeouts; NOTHING here needs it — last-batch-wins reconstruction
+    * replaces timeout flushing (see streamingSessions: processing-time
+    * timeouts under a drain-once trigger loop no-data batches
+    * unboundedly), and skipping it saves a plan+commit round.
+    */
+  private val SinkConfs = Map(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
   /** Event-time tumbling-window aggregation: Update mode emits each
     * window's refreshed total per micro-batch into the delta sink; the
@@ -677,36 +753,26 @@ object StreamingOps {
       stateRoot: Option[String] = None): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.TimeMode
-    val prevProvider = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ds = streamEvents(spark, dir)
-        .select(col("user_id"), col("event_type"), col("event_id"))
-        .as[(Long, String, Long)]
-      val updated = ds
-        .groupByKey(_._1)
-        .transformWithState(new UserActivityProcessor,
-          TimeMode.None(), OutputMode.Update())
-      runToDeltaSink(spark, updated.toDF(), "tws",
-        root = effectiveRoot(stateRoot, "tws"))
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("batch_id"), col("n_events"), col("n_types"),
-          col("max_event_id"))).as("last"))
-        .select(col("user_id"),
-          col("last.n_events").as("n_events"),
-          col("last.n_types").as("n_types"),
-          col("last.max_event_id").as("max_event_id"))
-        .orderBy(col("user_id"))
-    } finally {
-      prevProvider match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
+    val ds = streamEvents(spark, dir)
+      .select(col("user_id"), col("event_type"), col("event_id"))
+      .as[(Long, String, Long)]
+    val updated = ds
+      .groupByKey(_._1)
+      .transformWithState(new UserActivityProcessor,
+        TimeMode.None(), OutputMode.Update())
+    runToDeltaSink(spark, updated.toDF(), "tws",
+        root = effectiveRoot(stateRoot, "tws"),
+        confs = Map("spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming.state." +
+            "RocksDBStateStoreProvider")))
+      .groupBy(col("user_id"))
+      .agg(max(struct(col("batch_id"), col("n_events"), col("n_types"),
+        col("max_event_id"))).as("last"))
+      .select(col("user_id"),
+        col("last.n_events").as("n_events"),
+        col("last.n_types").as("n_types"),
+        col("last.max_event_id").as("max_event_id"))
+      .orderBy(col("user_id"))
   }
 
   /** Streaming near-dup screening against the PERSISTED historical band
@@ -779,21 +845,9 @@ object StreamingOps {
     // inspect the directory it drains into).
     val root = effectiveRoot(stateRoot, "band_dedup")
     val streamBandTab = stateDir(root, "bands")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val newDocs = reader.parquet(sourceDir.getOrElse(dir)).filter(isBatch)
+    val newDocs = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir).filter(isBatch)
     val sinkDir = stateDir(root, "sink")
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
     // The historical side is FIXED for the life of the query — cache it
     // once across micro-batches (bands for candidate gen, shingle sets
     // for verification) instead of re-scanning parquet per batch. The
@@ -814,54 +868,48 @@ object StreamingOps {
       try corpusBands.unpersist(false) catch { case _: Throwable => () }
       try corpusDocs.unpersist(false) catch { case _: Throwable => () }
     })
-    val w = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        val bb = Dedup.bandDocs(batch)
-          .select(col("doc_id"), col("band"), col("bucket"))
-          // barrier: batch bands feed the state append and two
-          // candidate joins; band once
-          .persist()
-        // state append FIRST, so "state" below = earlier batches ∪ this
-        // one — within-batch and cross-batch stream pairs fall out of
-        // the same join. Recover any interrupted compaction swap BEFORE
-        // the append: appending into a mid-swap-missing directory would
-        // make the fresh append masquerade as the full state.
-        StreamState.recover(ss, streamBandTab)
-        bb.write.mode("append").parquet(streamBandTab)
-        // bounded state lifecycle: compact the append-only state table
-        // before this batch's read when its file count crosses the
-        // bound — per-batch state reads stay O(state), not O(batches)
-        StreamState.maybeCompact(ss, streamBandTab, stateCompactMaxFiles,
-          tag = "band_dedup/bands")
-        // batch side capped on its own frequencies; the growing state
-        // side re-caps per read (it IS a self-side over enough
-        // micro-batches — the r8 skew bomb paid incrementally)
-        val newBands = Dedup.capHotBuckets(bb)
-          .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
-        val cross = newBands
-          .join(corpusBands, Seq("band", "bucket"))
-          .select(col("new_id"), col("corpus_id"))
-        val state = Dedup.capHotBuckets(ss.read.parquet(streamBandTab))
-          .select(col("doc_id").as("other_id"), col("band"), col("bucket"))
-        val streamPairs = newBands
-          .join(state, Seq("band", "bucket"))
-          .filter(col("new_id") =!= col("other_id"))
-          .select(greatest(col("new_id"), col("other_id")).as("new_id"),
-            least(col("new_id"), col("other_id")).as("corpus_id"))
-        val pairs = cross.unionByName(streamPairs).distinct()
-        // verification joins the cached corpus — candidate-bounded work
-        Dedup.verifyPairs(pairs, corpusDocs,
-            "new_id", "corpus_id", 0.5)
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(sinkDir)
-        bb.unpersist(false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(newDocs, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      val bb = Dedup.bandDocs(batch)
+        .select(col("doc_id"), col("band"), col("bucket"))
+        // barrier: batch bands feed the state append and two
+        // candidate joins; band once
+        .persist()
+      // state append FIRST, so "state" below = earlier batches ∪ this
+      // one — within-batch and cross-batch stream pairs fall out of
+      // the same join. Recover any interrupted compaction swap BEFORE
+      // the append: appending into a mid-swap-missing directory would
+      // make the fresh append masquerade as the full state.
+      StreamState.recover(ss, streamBandTab)
+      bb.write.mode("append").parquet(streamBandTab)
+      // bounded state lifecycle: compact the append-only state table
+      // before this batch's read when its file count crosses the
+      // bound — per-batch state reads stay O(state), not O(batches)
+      StreamState.maybeCompact(ss, streamBandTab, stateCompactMaxFiles,
+        tag = "band_dedup/bands")
+      // batch side capped on its own frequencies; the growing state
+      // side re-caps per read (it IS a self-side over enough
+      // micro-batches — the r8 skew bomb paid incrementally)
+      val newBands = Dedup.capHotBuckets(bb)
+        .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
+      val cross = newBands
+        .join(corpusBands, Seq("band", "bucket"))
+        .select(col("new_id"), col("corpus_id"))
+      val state = Dedup.capHotBuckets(ss.read.parquet(streamBandTab))
+        .select(col("doc_id").as("other_id"), col("band"), col("bucket"))
+      val streamPairs = newBands
+        .join(state, Seq("band", "bucket"))
+        .filter(col("new_id") =!= col("other_id"))
+        .select(greatest(col("new_id"), col("other_id")).as("new_id"),
+          least(col("new_id"), col("other_id")).as("corpus_id"))
+      val pairs = cross.unionByName(streamPairs).distinct()
+      // verification joins the cached corpus — candidate-bounded work
+      Dedup.verifyPairs(pairs, corpusDocs,
+          "new_id", "corpus_id", 0.5)
+        .withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(sinkDir)
+      bb.unpersist(false)
+    }
     val sinkSchema = StructType(Seq(
       StructField("new_id", LongType),
       StructField("corpus_id", LongType),
@@ -926,54 +974,36 @@ object StreamingOps {
     })
     val root = effectiveRoot(stateRoot, opName)
     val streamBandTab = stateDir(root, "bands")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val newDocs = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .filter(isBatch)
+    val newDocs = streamDocuments(spark, dir).filter(isBatch)
     val sinkDir = stateDir(root, "sink")
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        val bb = Dedup.md5BandedSignatures(Dedup.md5ShingledDocs(batch))
-          .select(col("doc_id"), col("band"), col("bucket"))
-          .persist()
-        StreamState.recover(ss, streamBandTab)
-        bb.write.mode("append").parquet(streamBandTab)
-        StreamState.maybeCompact(ss, streamBandTab,
-          tag = s"$opName/bands")
-        // both moving sides capped, as in the production twin
-        val newBands = Dedup.capHotBuckets(bb)
-          .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
-        val cross = newBands
-          .join(corpusBands, Seq("band", "bucket"))
-          .select(col("new_id"), col("corpus_id"))
-        val state = Dedup.capHotBuckets(ss.read.parquet(streamBandTab))
-          .select(col("doc_id").as("other_id"), col("band"), col("bucket"))
-        val streamPairs = newBands
-          .join(state, Seq("band", "bucket"))
-          .filter(col("new_id") =!= col("other_id"))
-          .select(greatest(col("new_id"), col("other_id")).as("new_id"),
-            least(col("new_id"), col("other_id")).as("corpus_id"))
-        val pairs = cross.unionByName(streamPairs).distinct()
-        Dedup.md5VerifyPairs(pairs, allSh, "new_id", "corpus_id", 0.5)
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(sinkDir)
-        bb.unpersist(false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(newDocs, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      val bb = Dedup.md5BandedSignatures(Dedup.md5ShingledDocs(batch))
+        .select(col("doc_id"), col("band"), col("bucket"))
+        .persist()
+      StreamState.recover(ss, streamBandTab)
+      bb.write.mode("append").parquet(streamBandTab)
+      StreamState.maybeCompact(ss, streamBandTab,
+        tag = s"$opName/bands")
+      // both moving sides capped, as in the production twin
+      val newBands = Dedup.capHotBuckets(bb)
+        .select(col("doc_id").as("new_id"), col("band"), col("bucket"))
+      val cross = newBands
+        .join(corpusBands, Seq("band", "bucket"))
+        .select(col("new_id"), col("corpus_id"))
+      val state = Dedup.capHotBuckets(ss.read.parquet(streamBandTab))
+        .select(col("doc_id").as("other_id"), col("band"), col("bucket"))
+      val streamPairs = newBands
+        .join(state, Seq("band", "bucket"))
+        .filter(col("new_id") =!= col("other_id"))
+        .select(greatest(col("new_id"), col("other_id")).as("new_id"),
+          least(col("new_id"), col("other_id")).as("corpus_id"))
+      val pairs = cross.unionByName(streamPairs).distinct()
+      Dedup.md5VerifyPairs(pairs, allSh, "new_id", "corpus_id", 0.5)
+        .withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(sinkDir)
+      bb.unpersist(false)
+    }
     val sinkSchema = StructType(Seq(
       StructField("new_id", LongType),
       StructField("corpus_id", LongType),
@@ -1030,68 +1060,50 @@ object StreamingOps {
     // stream window state: (doc_id, wh) per batch, min-doc on read
     val root = effectiveRoot(stateRoot, "window_dedup")
     val stateTab = stateDir(root, "windows")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val newDocs = reader.parquet(sourceDir.getOrElse(dir)).filter(isBatch)
+    val newDocs = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir).filter(isBatch)
     val sinkDir = stateDir(root, "sink")
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val wq = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, stateTab)
-        // arrival contract first (r10 advice): seed the running max
-        // from durable state on the first batch of a resumed run, then
-        // fail loudly on a non-monotone batch instead of silently
-        // mis-keeping; the persisted batch watermark keeps a
-        // crash-replayed batch exempt across restarts (r11 advice #2)
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, stateTab).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue)
-          existingStateMax(ss, stateTab, "doc_id").foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax)
-        root.foreach(_ => writeBatchMarker(ss, stateTab, id))
-        val toks = Dedup.tokenizedDocs(batch)
-        // barrier: batch windows feed the state append and the screen
-        val bw = Dedup.windowRows(toks, w).persist()
-        // state append FIRST (the q116 discipline): state = earlier
-        // batches ∪ this one, so within-batch and cross-batch stream
-        // borrows fall out of the same min-doc rule
-        bw.select(col("doc_id"), col("wh")).distinct()
-          .write.mode("append").parquet(stateTab)
-        StreamState.maybeCompact(ss, stateTab, tag = "window_dedup/windows")
-        val stateMin = ss.read.parquet(stateTab)
-          .groupBy(col("wh")).agg(min(col("doc_id")).as("min_doc"))
-        val removed = bw
-          .join(corpusW, Seq("wh"), "left")
-          .join(stateMin, Seq("wh"), "left")
-          .filter(col("in_corpus").isNotNull ||
-            col("min_doc") < col("doc_id"))
-          .groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(col("pos"))).as("starts"),
-            count(lit(1)).as("n_dup"))
-        Dedup.reassembleUncovered(toks, removed, w)
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(sinkDir)
-        bw.unpersist(false)
-        toks.unpersist(false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(wq, root)
-    q.awaitTermination()
+    drain(newDocs, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, stateTab)
+      // arrival contract first (r10 advice): seed the running max
+      // from durable state on the first batch of a resumed run, then
+      // fail loudly on a non-monotone batch instead of silently
+      // mis-keeping; the persisted batch watermark keeps a
+      // crash-replayed batch exempt across restarts (r11 advice #2)
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, stateTab).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue)
+        existingStateMax(ss, stateTab, "doc_id").foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax)
+      root.foreach(_ => writeBatchMarker(ss, stateTab, id))
+      val toks = Dedup.tokenizedDocs(batch)
+      // barrier: batch windows feed the state append and the screen
+      val bw = Dedup.windowRows(toks, w).persist()
+      // state append FIRST (the q116 discipline): state = earlier
+      // batches ∪ this one, so within-batch and cross-batch stream
+      // borrows fall out of the same min-doc rule
+      bw.select(col("doc_id"), col("wh")).distinct()
+        .write.mode("append").parquet(stateTab)
+      StreamState.maybeCompact(ss, stateTab, tag = "window_dedup/windows")
+      val stateMin = ss.read.parquet(stateTab)
+        .groupBy(col("wh")).agg(min(col("doc_id")).as("min_doc"))
+      val removed = bw
+        .join(corpusW, Seq("wh"), "left")
+        .join(stateMin, Seq("wh"), "left")
+        .filter(col("in_corpus").isNotNull ||
+          col("min_doc") < col("doc_id"))
+        .groupBy(col("doc_id"))
+        .agg(sort_array(collect_list(col("pos"))).as("starts"),
+          count(lit(1)).as("n_dup"))
+      Dedup.reassembleUncovered(toks, removed, w)
+        .withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(sinkDir)
+      bw.unpersist(false)
+      toks.unpersist(false)
+    }
     val sinkSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_tokens", LongType),
@@ -1129,36 +1141,23 @@ object StreamingOps {
       (c.toLong, (0 until dim).map(d =>
         Similarity.mdNibbleVal(s"iv|$c|$d")).toSeq))
     val centDf = spark.createDataFrame(model).toDF("c", "w")
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val newVecs = spark.readStream
-      .schema(embSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
+    val newVecs = streamParquet(spark, embeddingsSchema, dir,
+        "embeddings.parquet")
       .filter(col("vec_id") % batchMod === batchRem)
     val root = effectiveRoot(stateRoot, "ivf_assign")
     val sinkDir = stateDir(root, "sink")
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = newVecs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        batch
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-          .crossJoin(broadcast(centDf))
-          .withColumn("s", dotNative(col("v"), col("w")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("vec_id"))
-              .orderBy(col("s").desc, col("c"))))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("c").as("cid"), col("s").as("score"))
-          .write.mode("append").parquet(sinkDir)
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(newVecs, root) { (batch, id) =>
+      batch
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+        .crossJoin(broadcast(centDf))
+        .withColumn("s", dotNative(col("v"), col("w")))
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("vec_id"))
+            .orderBy(col("s").desc, col("c"))))
+        .filter(col("rn") === 1)
+        .select(col("vec_id"), col("c").as("cid"), col("s").as("score"))
+        .write.mode("append").parquet(sinkDir)
+    }
     val sinkSchema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("cid", LongType),
@@ -1186,31 +1185,19 @@ object StreamingOps {
       k: Int = 200, stateRoot: Option[String] = None): DataFrame = {
     val root = effectiveRoot(stateRoot, "weighted_sample")
     val versRoot = stateDir(root, "versions")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
     // one file per micro-batch: on the single-file fixture this is one
     // batch; the multi-batch fold (the point of the reservoir) is
     // exercised by the spec over a two-file `documents_*` corpus,
     // which the prefix glob also admits
-    val newDocs = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    val newDocs = streamDocuments(spark, dir, "documents*.parquet", Some(1))
     // driver-tracked latest state version (foreachBatch runs on the
     // driver); the per-doc draw is deterministic and the merge below
     // dedups on doc_id, so even an ungated replay would be a no-op —
     // the VersionedLedger batch-id gate still skips it (uniform with
     // the non-idempotent ledger folds, and one fewer version write).
     val ledger = new VersionedLedger(spark, versRoot, root)
-    val w = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        if (!ledger.isReplayed(id)) {
+    drain(newDocs, root) { (batch, id) =>
+      if (!ledger.isReplayed(id)) {
         val ss = batch.sparkSession
         val h = conv(substring(md5(concat(lit("ws|"),
           col("doc_id").cast("string")).cast("binary")), 1, 12), 16, 10)
@@ -1233,11 +1220,8 @@ object StreamingOps {
           .orderBy(floor(col("es_key") * lit(1e9) + lit(0.5)).cast("long")
             .desc, col("doc_id"))
           .limit(k), id)
-        }
       }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    }
     import org.apache.spark.sql.expressions.Window
     val stateSchema = StructType(Seq(
       StructField("doc_id", LongType),
@@ -1321,33 +1305,15 @@ object StreamingOps {
     import graft.sources.Tables
     val root = effectiveRoot(stateRoot, "hll_distinct")
     val stateTab = stateDir(root, "registers")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, stateTab)
-        TextOps.hllRegisters(batch.toDF())
-          .write.mode("append").parquet(stateTab)
-        StreamState.maybeCompact(ss, stateTab, tag = "hll_distinct/registers")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, stateTab)
+      TextOps.hllRegisters(batch)
+        .write.mode("append").parquet(stateTab)
+      StreamState.maybeCompact(ss, stateTab, tag = "hll_distinct/registers")
+    }
     val regSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("reg", LongType),
@@ -1390,34 +1356,16 @@ object StreamingOps {
     import graft.sources.Tables
     val root = effectiveRoot(stateRoot, "source_overlap")
     val stateTab = stateDir(root, "sketch")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, stateTab)
-        Dedup.bottomKSketch(
-            Dedup.shingleSetBySource(batch.toDF()), k)
-          .write.mode("append").parquet(stateTab)
-        StreamState.maybeCompact(ss, stateTab, tag = "source_overlap/sketch")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, stateTab)
+      Dedup.bottomKSketch(
+          Dedup.shingleSetBySource(batch), k)
+        .write.mode("append").parquet(stateTab)
+      StreamState.maybeCompact(ss, stateTab, tag = "source_overlap/sketch")
+    }
     val skSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("h", StringType)))
@@ -1464,51 +1412,33 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "bm25")
     val dlTab = stateDir(root, "doclen")
     val postTab = stateDir(root, "postings")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        val toks = batch.toDF()
-          .select(col("doc_id"),
-            TextAnalytics.tokens(col("text")).as("toks"))
-          .withColumn("dl", size(col("toks")).cast("double"))
-          // barrier: feeds the doclen append and the postings melt
-          .persist()
-        StreamState.recover(ss, dlTab)
-        StreamState.recover(ss, postTab)
-        toks.select(col("doc_id"), col("dl"))
-          .write.mode("append").parquet(dlTab)
-        StreamState.maybeCompact(ss, dlTab, tag = "bm25/doclen")
-        toks
-          .select(col("doc_id"), col("dl"),
-            explode(array(terms.map(t =>
-              struct(lit(t).as("term"),
-                size(filter(col("toks"), x => x === lit(t)))
-                  .cast("long").as("tf"))): _*)).as("x"))
-          .select(col("doc_id"), col("dl"), col("x.term"), col("x.tf"))
-          .filter(col("tf") > 0)
-          .write.mode("append").parquet(postTab)
-        StreamState.maybeCompact(ss, postTab, tag = "bm25/postings")
-        toks.unpersist(false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      val toks = batch
+        .select(col("doc_id"),
+          TextAnalytics.tokens(col("text")).as("toks"))
+        .withColumn("dl", size(col("toks")).cast("double"))
+        // barrier: feeds the doclen append and the postings melt
+        .persist()
+      StreamState.recover(ss, dlTab)
+      StreamState.recover(ss, postTab)
+      toks.select(col("doc_id"), col("dl"))
+        .write.mode("append").parquet(dlTab)
+      StreamState.maybeCompact(ss, dlTab, tag = "bm25/doclen")
+      toks
+        .select(col("doc_id"), col("dl"),
+          explode(array(terms.map(t =>
+            struct(lit(t).as("term"),
+              size(filter(col("toks"), x => x === lit(t)))
+                .cast("long").as("tf"))): _*)).as("x"))
+        .select(col("doc_id"), col("dl"), col("x.term"), col("x.tf"))
+        .filter(col("tf") > 0)
+        .write.mode("append").parquet(postTab)
+      StreamState.maybeCompact(ss, postTab, tag = "bm25/postings")
+      toks.unpersist(false)
+    }
     val dlSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("dl", DoubleType)))
     val postSchema = StructType(Seq(
@@ -1557,34 +1487,16 @@ object StreamingOps {
     import graft.operators.Multimodal
     val root = effectiveRoot(stateRoot, "frame_features")
     val stateTab = stateDir(root, "features")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, stateTab)
-        Multimodal.frameFeaturesAggDf(batch.toDF(), frameSize)
-          .write.mode("append").parquet(stateTab)
-        StreamState.maybeCompact(ss, stateTab,
-          tag = "frame_features/features")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, stateTab)
+      Multimodal.frameFeaturesAggDf(batch, frameSize)
+        .write.mode("append").parquet(stateTab)
+      StreamState.maybeCompact(ss, stateTab,
+        tag = "frame_features/features")
+    }
     val outSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_frames", LongType),
@@ -1627,57 +1539,39 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "exact_dedup")
     val regTab = stateDir(root, "registry")
     val sinkDir = stateDir(root, "sink")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, regTab)
-        // arrival contract (r10 advice): the first-occurrence-wins rule
-        // needs monotone id arrival; seed from durable registry state
-        // on resume, then fail loudly on a non-monotone batch; the
-        // persisted batch watermark keeps a crash-replayed batch
-        // exempt across restarts (r11 advice #2)
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, regTab).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue)
-          existingStateMax(ss, regTab, "doc_id").foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax)
-        root.foreach(_ => writeBatchMarker(ss, regTab, id))
-        val bh = batch.toDF()
-          .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
-          // barrier: feeds the registry append and the keeper join
-          .persist()
-        bh.write.mode("append").parquet(regTab)
-        StreamState.maybeCompact(ss, regTab, stateCompactMaxFiles,
-          tag = "exact_dedup/registry")
-        val minReg = ss.read.parquet(regTab)
-          .groupBy(col("h")).agg(min(col("doc_id")).as("min_doc"))
-        bh.join(minReg, Seq("h"))
-          .filter(col("min_doc") === col("doc_id"))
-          .select(col("doc_id"), col("h"))
-          .write.mode("append").parquet(sinkDir)
-        bh.unpersist(false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, regTab)
+      // arrival contract (r10 advice): the first-occurrence-wins rule
+      // needs monotone id arrival; seed from durable registry state
+      // on resume, then fail loudly on a non-monotone batch; the
+      // persisted batch watermark keeps a crash-replayed batch
+      // exempt across restarts (r11 advice #2)
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, regTab).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue)
+        existingStateMax(ss, regTab, "doc_id").foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax)
+      root.foreach(_ => writeBatchMarker(ss, regTab, id))
+      val bh = batch
+        .select(col("doc_id"), md5(col("text").cast("binary")).as("h"))
+        // barrier: feeds the registry append and the keeper join
+        .persist()
+      bh.write.mode("append").parquet(regTab)
+      StreamState.maybeCompact(ss, regTab, stateCompactMaxFiles,
+        tag = "exact_dedup/registry")
+      val minReg = ss.read.parquet(regTab)
+        .groupBy(col("h")).agg(min(col("doc_id")).as("min_doc"))
+      bh.join(minReg, Seq("h"))
+        .filter(col("min_doc") === col("doc_id"))
+        .select(col("doc_id"), col("h"))
+        .write.mode("append").parquet(sinkDir)
+      bh.unpersist(false)
+    }
     val rowSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("h", StringType)))
     val copies = spark.read.schema(rowSchema).parquet(regTab)
@@ -1715,35 +1609,17 @@ object StreamingOps {
     import graft.operators.QualityModel
     val root = effectiveRoot(stateRoot, "nb_train")
     val stateTab = stateDir(root, "counts")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, stateTab)
-        QualityModel.tokenClassCounts(
-            QualityModel.flagged(batch.toDF()))
-          .withColumn("batch_id", lit(id))
-          .write.mode("append").parquet(stateTab)
-        StreamState.maybeCompact(ss, stateTab, tag = "nb_train/counts")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, stateTab)
+      QualityModel.tokenClassCounts(
+          QualityModel.flagged(batch))
+        .withColumn("batch_id", lit(id))
+        .write.mode("append").parquet(stateTab)
+      StreamState.maybeCompact(ss, stateTab, tag = "nb_train/counts")
+    }
     val cntSchema = StructType(Seq(
       StructField("token", StringType),
       StructField("cnt", LongType),
@@ -1783,43 +1659,25 @@ object StreamingOps {
     val root = effectiveRoot(stateRoot, "dup_ladder")
     val winTab = stateDir(root, "windows")
     val lenTab = stateDir(root, "lengths")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, winTab)
-        StreamState.recover(ss, lenTab)
-        val toks = Dedup.tokenizedDocs(batch.toDF())
-        toks.select(col("doc_id"),
-            size(col("toks")).cast("long").as("n_tokens"))
-          .write.mode("append").parquet(lenTab)
-        rungs.map(rw => Dedup.windowRows(toks, rw)
-            .select(lit(rw.toLong).as("w"), col("doc_id"), col("wh"))
-            .distinct())
-          .reduce(_.unionByName(_))
-          .write.mode("append").parquet(winTab)
-        StreamState.maybeCompact(ss, lenTab, tag = "dup_ladder/lengths")
-        StreamState.maybeCompact(ss, winTab, tag = "dup_ladder/windows")
-        toks.unpersist(false)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, winTab)
+      StreamState.recover(ss, lenTab)
+      val toks = Dedup.tokenizedDocs(batch)
+      toks.select(col("doc_id"),
+          size(col("toks")).cast("long").as("n_tokens"))
+        .write.mode("append").parquet(lenTab)
+      rungs.map(rw => Dedup.windowRows(toks, rw)
+          .select(lit(rw.toLong).as("w"), col("doc_id"), col("wh"))
+          .distinct())
+        .reduce(_.unionByName(_))
+        .write.mode("append").parquet(winTab)
+      StreamState.maybeCompact(ss, lenTab, tag = "dup_ladder/lengths")
+      StreamState.maybeCompact(ss, winTab, tag = "dup_ladder/windows")
+      toks.unpersist(false)
+    }
     val lenSchema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_tokens", LongType)))
@@ -1968,32 +1826,14 @@ object StreamingOps {
     val ledger = new VersionedLedger(spark, versRoot, root)
     if (ledger.isEmpty)
       ledger.init(vocabOf(Tables.documents(spark, dir).filter(!isBatch)))
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val newDocs = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .filter(isBatch)
-    val w = newDocs.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // tf/df SUM-merge is not idempotent: skip a crash-replayed
-        // batch already folded into the resumed version (r11 advice #1)
-        if (!ledger.isReplayed(id)) {
-          val prev = batch.sparkSession.read.parquet(ledger.path)
-          ledger.write(prev.unionByName(vocabOf(batch))
-            .groupBy(col("token"))
-            .agg(sum(col("tf")).as("tf"), sum(col("df")).as("df")), id)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val newDocs = streamDocuments(spark, dir).filter(isBatch)
+    drain(newDocs, root) { (batch, id) =>
+      // tf/df SUM-merge is not idempotent: the ledger gate skips a
+      // crash-replayed batch already folded into the resumed version
+      // (r11 advice #1); the historical init makes the ledger non-empty
+      ledger.fold(id, vocabOf(batch))(_.groupBy(col("token"))
+        .agg(sum(col("tf")).as("tf"), sum(col("df")).as("df")))
+    }
     spark.read.parquet(ledger.path)
       .select(col("token"), col("tf"), col("df"))
       .orderBy(col("token"))
@@ -2037,30 +1877,18 @@ object StreamingOps {
     val bandTab = stateDir(root, "bands")
     val labRoot = stateDir(root, "labels")
     val ledger = new VersionedLedger(spark, labRoot, root)
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // label composition over already-composed labels is idempotent,
-        // but a replayed batch would re-APPEND its bands (duplicate
-        // state rows inflate capHotBuckets' counts) and could re-union
-        // already-labeled ids — skip the whole fold (r11 advice #1)
-        if (!ledger.isReplayed(id)) {
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      // label composition over already-composed labels is idempotent,
+      // but a replayed batch would re-APPEND its bands (duplicate
+      // state rows inflate capHotBuckets' counts) and could re-union
+      // already-labeled ids — skip the whole fold (r11 advice #1)
+      if (!ledger.isReplayed(id)) {
         val ss = batch.sparkSession
-        val batchIds = batch.toDF().select(col("doc_id"))
+        val batchIds = batch.select(col("doc_id"))
         val bBands = Dedup.md5BandedSignatures(
-          Dedup.md5ShingledDocs(batch.toDF())).persist()
+          Dedup.md5ShingledDocs(batch)).persist()
         // state append FIRST: state = earlier batches ∪ this one
         StreamState.recover(ss, bandTab)
         bBands.write.mode("append").parquet(bandTab)
@@ -2112,12 +1940,8 @@ object StreamingOps {
         ledger.write(newLabels, id)
         stateBands.unpersist(false)
         bBands.unpersist(false)
-        }
-        ()
       }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    }
     spark.read.parquet(ledger.path)
       .select(col("id").as("doc_id"), col("label").as("cluster"))
       .withColumn("n_members",
@@ -2156,17 +1980,15 @@ object StreamingOps {
     val ledger = new VersionedLedger(spark, histRoot, root)
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // the seed∪batch recompute is not idempotent (a replayed
-        // batch's events already close the open seeds): skip a
-        // crash-replayed batch (r11 advice #1)
-        if (!ledger.isReplayed(id)) {
+    drain(stream, root) { (batch, id) =>
+      // the seed∪batch recompute is not idempotent (a replayed
+      // batch's events already close the open seeds): skip a
+      // crash-replayed batch (r11 advice #1)
+      if (!ledger.isReplayed(id)) {
         val ss = batch.sparkSession
         val byUser = Window.partitionBy(col("user_id"))
           .orderBy(col("ts"), col("event_id"))
-        val batchEv = batch.toDF()
+        val batchEv = batch
           .select(col("user_id"), col("ts"), col("event_id"),
             col("event_type"))
           .withColumn("base_v", lit(null).cast("long"))
@@ -2195,12 +2017,8 @@ object StreamingOps {
             .filter(col("valid_to_ts").isNotNull)
             .unionByName(recomputed)
         ledger.write(artifact, id)
-        }
-        ()
       }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    }
     spark.read.parquet(ledger.path)
       .select(col("user_id"), col("version"), col("attr"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
@@ -2241,31 +2059,15 @@ object StreamingOps {
       try evalGrams.unpersist(false) catch { case _: Throwable => () })
     val root = effectiveRoot(stateRoot, "decontamination")
     val sinkDir = stateDir(root, "sink")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val trainStream = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-      .filter(!isEval)
-    val w = trainStream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        grams(batch.toDF(), "train_id")
-          .join(broadcast(evalGrams), "gh")
-          .groupBy(col("train_id"), col("eval_id"))
-          .agg(countDistinct(col("gh")).as("n_shared"))
-          .filter(col("n_shared") >= minShared)
-          .write.mode("append").parquet(sinkDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val trainStream = streamDocuments(spark, dir).filter(!isEval)
+    drain(trainStream, root) { (batch, id) =>
+      grams(batch, "train_id")
+        .join(broadcast(evalGrams), "gh")
+        .groupBy(col("train_id"), col("eval_id"))
+        .agg(countDistinct(col("gh")).as("n_shared"))
+        .filter(col("n_shared") >= minShared)
+        .write.mode("append").parquet(sinkDir)
+    }
     val sinkSchema = StructType(Seq(
       StructField("train_id", LongType),
       StructField("eval_id", LongType),
@@ -2301,40 +2103,12 @@ object StreamingOps {
       .agg(count(lit(1)).as("n_seen"),
         sum(graft.functions.TextAnalytics.qualityFlag(col("text")))
           .as("n_pass"))
-    val root = effectiveRoot(stateRoot, "quality_gate")
-    val ledgerRoot = stateDir(root, "ledger")
-    val ledger = new VersionedLedger(spark, ledgerRoot, root)
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val stream = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // count SUM-merge is not idempotent: skip a crash-replayed
-        // batch already folded into the resumed version (r11 advice #1)
-        if (!ledger.isReplayed(id)) {
-          val ss = batch.sparkSession
-          val merged =
-            if (ledger.isEmpty) screen(batch.toDF())
-            else ss.read.parquet(ledger.path)
-              .unionByName(screen(batch.toDF()))
-              .groupBy(col("source"))
-              .agg(sum(col("n_seen")).as("n_seen"),
-                sum(col("n_pass")).as("n_pass"))
-          ledger.write(merged, id)
-        }
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
+    // count SUM-merge is not idempotent: the ledger gate skips a
+    // crash-replayed batch already folded in (r11 advice #1)
+    mergedState(spark, streamDocuments(spark, dir), "quality_gate",
+        "ledger", stateRoot)(screen)(
+        _.groupBy(col("source")).agg(sum(col("n_seen")).as("n_seen"),
+          sum(col("n_pass")).as("n_pass")))
       .select(col("source"), col("n_seen"), col("n_pass"),
         (col("n_pass").cast("double") / col("n_seen").cast("double"))
           .as("accept_rate"))
@@ -2363,34 +2137,13 @@ object StreamingOps {
     def daily(ev: DataFrame): DataFrame = ev
       .groupBy(col("event_type"), col("ts").cast("date").as("day"))
       .agg(count(lit(1)).as("n"))
-    val root = effectiveRoot(stateRoot, "ewma_anomaly")
-    val ledgerRoot = stateDir(root, "ledger")
-    val ledger = new VersionedLedger(spark, ledgerRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // daily-count SUM-merge is not idempotent: skip a crash-
-        // replayed batch already folded into the resumed version
-        // (r11 advice #1)
-        if (!ledger.isReplayed(id)) {
-          val ss = batch.sparkSession
-          val merged =
-            if (ledger.isEmpty) daily(batch.toDF())
-            else ss.read.parquet(ledger.path)
-              .unionByName(daily(batch.toDF()))
-              .groupBy(col("event_type"), col("day"))
-              .agg(sum(col("n")).as("n"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    // daily-count SUM-merge is not idempotent: the ledger gate skips a
+    // crash-replayed batch already folded in (r11 advice #1)
     graft.operators.Analytics.ewmaFromDaily(
-      spark.read.parquet(ledger.path))
+      mergedState(spark, streamEvents(spark, dir, sourceGlob,
+          maxFilesPerTrigger, sourceDir), "ewma_anomaly", "ledger",
+          stateRoot)(daily)(
+        _.groupBy(col("event_type"), col("day")).agg(sum(col("n")).as("n"))))
   }
 
   /** Streaming last-touch attribution (q215): q214 run as a live
@@ -2425,71 +2178,58 @@ object StreamingOps {
     val dailyLedger = new VersionedLedger(spark, ledgerRoot, root)
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        val ev = batch.toDF().select(col("user_id"), col("ts"),
-          col("event_id"), col("event_type"), col("value"))
-        // state clicks re-enter with their ORIGINAL (ts, event_id) so
-        // the window's tie-break matches the batch query
-        val synth =
-          if (clickLedger.isEmpty) ev.limit(0)
-          else ss.read.parquet(clickLedger.path)
-            .select(col("user_id"), col("ts"), col("event_id"),
-              lit("click").as("event_type"), lit(0.0).as("value"))
-        val w = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val batchDaily = ev.unionByName(synth)
-          .withColumn("last_click_ts",
-            max(when(col("event_type") === "click", col("ts"))).over(w))
-          .filter(col("event_type") === "purchase")
-          .withColumn("att",
-            when(col("last_click_ts").isNotNull &&
-              col("ts") <= col("last_click_ts") +
-                expr("INTERVAL 1 HOUR"), 1L).otherwise(0L))
-          .withColumn("cents",
-            floor(col("value") * 100 + lit(0.5)).cast("long"))
-          .groupBy(col("ts").cast("date").as("day"))
-          .agg(count(lit(1)).as("n_purchases"),
-            sum(col("att")).as("n_attributed"),
-            sum(when(col("att") === 1L, col("cents")).otherwise(0L))
-              .as("attributed_cents"))
-        // daily SUM-merge is not idempotent: gate on the ledger's own
-        // replay watermark
-        if (!dailyLedger.isReplayed(id)) {
-          val merged =
-            if (dailyLedger.isEmpty) batchDaily
-            else ss.read.parquet(dailyLedger.path)
-              .unionByName(batchDaily)
-              .groupBy(col("day"))
-              .agg(sum(col("n_purchases")).as("n_purchases"),
-                sum(col("n_attributed")).as("n_attributed"),
-                sum(col("attributed_cents")).as("attributed_cents"))
-          dailyLedger.write(merged, id)
-        }
-        // fold batch clicks into per-user latest-click state:
-        // lexicographic max on (ts, event_id) — the max-merge is
-        // idempotent, but the gate still skips the redundant version
-        if (!clickLedger.isReplayed(id)) {
-          val batchClicks = ev.filter(col("event_type") === "click")
-            .select(col("user_id"), col("ts"), col("event_id"))
-          val allClicks =
-            if (clickLedger.isEmpty) batchClicks
-            else ss.read.parquet(clickLedger.path).unionByName(batchClicks)
-          val latest = allClicks
-            .withColumn("rk", row_number().over(
-              Window.partitionBy(col("user_id"))
-                .orderBy(col("ts").desc, col("event_id").desc)))
-            .filter(col("rk") === 1).drop("rk")
-          clickLedger.write(latest, id)
-        }
-        ()
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      val ev = batch.select(col("user_id"), col("ts"),
+        col("event_id"), col("event_type"), col("value"))
+      // state clicks re-enter with their ORIGINAL (ts, event_id) so
+      // the window's tie-break matches the batch query
+      val synth =
+        if (clickLedger.isEmpty) ev.limit(0)
+        else ss.read.parquet(clickLedger.path)
+          .select(col("user_id"), col("ts"), col("event_id"),
+            lit("click").as("event_type"), lit(0.0).as("value"))
+      val w = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val batchDaily = ev.unionByName(synth)
+        .withColumn("last_click_ts",
+          max(when(col("event_type") === "click", col("ts"))).over(w))
+        .filter(col("event_type") === "purchase")
+        .withColumn("att",
+          when(col("last_click_ts").isNotNull &&
+            col("ts") <= col("last_click_ts") +
+              expr("INTERVAL 1 HOUR"), 1L).otherwise(0L))
+        .withColumn("cents",
+          floor(col("value") * 100 + lit(0.5)).cast("long"))
+        .groupBy(col("ts").cast("date").as("day"))
+        .agg(count(lit(1)).as("n_purchases"),
+          sum(col("att")).as("n_attributed"),
+          sum(when(col("att") === 1L, col("cents")).otherwise(0L))
+            .as("attributed_cents"))
+      // daily SUM-merge is not idempotent: gate on the ledger's own
+      // replay watermark
+      dailyLedger.fold(id, batchDaily)(_.groupBy(col("day"))
+        .agg(sum(col("n_purchases")).as("n_purchases"),
+          sum(col("n_attributed")).as("n_attributed"),
+          sum(col("attributed_cents")).as("attributed_cents")))
+      // fold batch clicks into per-user latest-click state:
+      // lexicographic max on (ts, event_id) — the max-merge is
+      // idempotent, but the gate still skips the redundant version
+      if (!clickLedger.isReplayed(id)) {
+        val batchClicks = ev.filter(col("event_type") === "click")
+          .select(col("user_id"), col("ts"), col("event_id"))
+        val allClicks =
+          if (clickLedger.isEmpty) batchClicks
+          else ss.read.parquet(clickLedger.path).unionByName(batchClicks)
+        val latest = allClicks
+          .withColumn("rk", row_number().over(
+            Window.partitionBy(col("user_id"))
+              .orderBy(col("ts").desc, col("event_id").desc)))
+          .filter(col("rk") === 1).drop("rk")
+        clickLedger.write(latest, id)
       }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    }
     spark.read.parquet(dailyLedger.path)
       .select(col("day").cast("string").as("day"), col("n_purchases"),
         col("n_attributed"),
@@ -2542,15 +2282,13 @@ object StreamingOps {
     }
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        // count SUM-merge is not idempotent: skip a crash-replayed
-        // batch already folded into the resumed version (r11 advice #1)
-        if (!ledger.isReplayed(id)) {
+    drain(stream, root) { (batch, id) =>
+      // count SUM-merge is not idempotent: skip a crash-replayed
+      // batch already folded into the resumed version (r11 advice #1)
+      if (!ledger.isReplayed(id)) {
         val ss = batch.sparkSession
         val floor = floorRef.get
-        val bc = batch.toDF().groupBy(col("user_id"))
+        val bc = batch.groupBy(col("user_id"))
           .agg(count(lit(1)).as("bn"))
         val merged =
           (if (ledger.isEmpty)
@@ -2572,12 +2310,8 @@ object StreamingOps {
         if (!evictMax.isNullAt(0))
           floorRef.set(math.max(floor, evictMax.getLong(0)))
         ledger.write(kept.withColumn("floor", lit(floorRef.get)), id)
-        }
-        ()
       }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    }
     spark.read.parquet(ledger.path)
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -2622,51 +2356,38 @@ object StreamingOps {
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        // arrival contract on event_id (the lag rule is order-
-        // sensitive); watermark persisted beside the last-event ledger
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, lastRoot).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue && !lastLedger.isEmpty)
-          existingStateMax(ss, lastLedger.path, "event_id")
-            .foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax,
-          idCol = "event_id")
-        root.foreach(_ => writeBatchMarker(ss, lastRoot, id))
-        val ev = batch.toDF()
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"))
-          .withColumn("is_state", lit(0))
-        val synth = lastEventAnchors(ss, lastLedger, ev)
-        val flagged = graft.operators.Analytics
-          .debounceFlags(ev.unionByName(synth), gapSeconds)
-          .filter(col("is_state") === 0)
-        val bCounts = flagged
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("suppressed")).as("n_suppressed"))
-        // counts first (non-idempotent sum-merge), state second: a
-        // crash between the two commits replays into a skipped counts
-        // fold + a state fold that still sees its pre-batch image
-        if (!countsLedger.isReplayed(id)) {
-          val merged =
-            if (countsLedger.isEmpty) bCounts
-            else ss.read.parquet(countsLedger.path)
-              .unionByName(bCounts)
-              .groupBy(col("event_type"))
-              .agg(sum(col("n_events")).as("n_events"),
-                sum(col("n_suppressed")).as("n_suppressed"))
-          countsLedger.write(merged, id)
-        }
-        foldLastEvents(ss, lastLedger, ev, id)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      // arrival contract on event_id (the lag rule is order-
+      // sensitive); watermark persisted beside the last-event ledger
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, lastRoot).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue && !lastLedger.isEmpty)
+        existingStateMax(ss, lastLedger.path, "event_id")
+          .foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax,
+        idCol = "event_id")
+      root.foreach(_ => writeBatchMarker(ss, lastRoot, id))
+      val ev = batch
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"))
+        .withColumn("is_state", lit(0))
+      val synth = lastEventAnchors(ss, lastLedger, ev)
+      val flagged = graft.operators.Analytics
+        .debounceFlags(ev.unionByName(synth), gapSeconds)
+        .filter(col("is_state") === 0)
+      val bCounts = flagged
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(col("suppressed")).as("n_suppressed"))
+      // counts first (non-idempotent sum-merge), state second: a
+      // crash between the two commits replays into a skipped counts
+      // fold + a state fold that still sees its pre-batch image
+      countsLedger.fold(id, bCounts)(_.groupBy(col("event_type"))
+        .agg(sum(col("n_events")).as("n_events"),
+          sum(col("n_suppressed")).as("n_suppressed")))
+      foldLastEvents(ss, lastLedger, ev, id)
+    }
     spark.read.parquet(countsLedger.path)
       .select(col("event_type"), col("n_events"), col("n_suppressed"),
         (col("n_events") - col("n_suppressed")).as("n_kept"),
@@ -2699,14 +2420,13 @@ object StreamingOps {
         if (ledger.isEmpty) batchLast
         else ss.read.parquet(ledger.path).unionByName(batchLast)
       val carried = batchLast.columns.filterNot(keys.contains)
-      val latest = allLast
+      ledger.write(allLast
         .groupBy(keys.map(col): _*)
         .agg(max(struct(col("ts") +: col("event_id") +:
           carried.filterNot(Set("ts", "event_id")).map(col): _*))
           .as("m"))
         .select(keys.map(col) ++
-          carried.map(c => col(s"m.$c").as(c)): _*)
-      ledger.write(latest, id)
+          carried.map(c => col(s"m.$c").as(c)): _*), id)
     }
 
   /** Streaming inter-event gap histogram (q262): q260 per micro-batch.
@@ -2740,46 +2460,33 @@ object StreamingOps {
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, lastRoot).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue && !lastLedger.isEmpty)
-          existingStateMax(ss, lastLedger.path, "event_id")
-            .foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax,
-          idCol = "event_id")
-        root.foreach(_ => writeBatchMarker(ss, lastRoot, id))
-        val ev = batch.toDF()
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"))
-          .withColumn("is_state", lit(0))
-        val synth = lastEventAnchors(ss, lastLedger, ev)
-        val bHist = graft.operators.Analytics.gapRollup(
-          graft.operators.Analytics.gapBuckets(ev.unionByName(synth)))
-        // histogram first (non-idempotent merge), anchors second: a
-        // crash between the two commits replays into a skipped
-        // histogram fold + an anchor fold off its pre-batch image
-        if (!histLedger.isReplayed(id)) {
-          val merged =
-            if (histLedger.isEmpty) bHist
-            else ss.read.parquet(histLedger.path)
-              .unionByName(bHist)
-              .groupBy(col("event_type"), col("bucket"))
-              .agg(sum(col("n_gaps")).as("n_gaps"),
-                min(col("min_gap_sec")).as("min_gap_sec"),
-                max(col("max_gap_sec")).as("max_gap_sec"),
-                sum(col("sum_gap_sec")).as("sum_gap_sec"))
-          histLedger.write(merged, id)
-        }
-        foldLastEvents(ss, lastLedger, ev, id)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, lastRoot).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue && !lastLedger.isEmpty)
+        existingStateMax(ss, lastLedger.path, "event_id")
+          .foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax,
+        idCol = "event_id")
+      root.foreach(_ => writeBatchMarker(ss, lastRoot, id))
+      val ev = batch
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"))
+        .withColumn("is_state", lit(0))
+      val synth = lastEventAnchors(ss, lastLedger, ev)
+      val bHist = graft.operators.Analytics.gapRollup(
+        graft.operators.Analytics.gapBuckets(ev.unionByName(synth)))
+      // histogram first (non-idempotent merge), anchors second: a
+      // crash between the two commits replays into a skipped
+      // histogram fold + an anchor fold off its pre-batch image
+      histLedger.fold(id, bHist)(_.groupBy(col("event_type"), col("bucket"))
+        .agg(sum(col("n_gaps")).as("n_gaps"),
+          min(col("min_gap_sec")).as("min_gap_sec"),
+          max(col("max_gap_sec")).as("max_gap_sec"),
+          sum(col("sum_gap_sec")).as("sum_gap_sec")))
+      foldLastEvents(ss, lastLedger, ev, id)
+    }
     spark.read.parquet(histLedger.path)
       .select(col("event_type"), col("bucket"), col("n_gaps"),
         col("min_gap_sec"), col("max_gap_sec"), col("sum_gap_sec"))
@@ -2807,45 +2514,14 @@ object StreamingOps {
       sourceGlob: String = "documents.parquet",
       maxFilesPerTrigger: Option[Int] = None,
       stateRoot: Option[String] = None): DataFrame = {
-    val root = effectiveRoot(stateRoot, "deciles")
-    val histRoot = stateDir(root, "hist")
-    val ledger = new VersionedLedger(spark, histRoot, root)
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        // cnt sum-merge is not idempotent: skip a crash-replayed batch
-        if (!ledger.isReplayed(id)) {
-          val bHist = batch.toDF()
-            .groupBy(col("source"), col("n_chars"))
-            .agg(count(lit(1)).as("cnt"))
-          val merged =
-            if (ledger.isEmpty) bHist
-            else ss.read.parquet(ledger.path)
-              .unionByName(bHist)
-              .groupBy(col("source"), col("n_chars"))
-              .agg(sum(col("cnt")).as("cnt"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    // cnt sum-merge is not idempotent: the gate skips a crash replay
     graft.operators.TextOps.decilesOfHist(
-      spark.read.parquet(ledger.path))
+      mergedState(spark, streamDocuments(spark, dir, sourceGlob,
+          maxFilesPerTrigger, sourceDir), "deciles", "hist", stateRoot)(
+        _.groupBy(col("source"), col("n_chars"))
+          .agg(count(lit(1)).as("cnt")))(
+        _.groupBy(col("source"), col("n_chars"))
+          .agg(sum(col("cnt")).as("cnt"))))
       .orderBy(col("source"), col("decile"))
   }
 
@@ -2873,41 +2549,14 @@ object StreamingOps {
       maxFilesPerTrigger: Option[Int] = None,
       stateRoot: Option[String] = None): DataFrame = {
     import graft.operators.Similarity
-    val root = effectiveRoot(stateRoot, "labcent")
-    val sumsRoot = stateDir(root, "sums")
-    val ledger = new VersionedLedger(spark, sumsRoot, root)
-    val embSchema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType)),
-      StructField("label", IntegerType)))
-    val reader = spark.readStream
-      .schema(embSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bSums = Similarity.centroidSumsOf(batch.toDF(), dim)
-          val merged =
-            if (ledger.isEmpty) bSums
-            else ss.read.parquet(ledger.path)
-              .unionByName(bSums)
-              .groupBy(col("label"))
-              .agg(sum(col("n_vecs")).as("n_vecs"),
-                (1 to dim).map(i => sum(col(s"s$i")).as(s"s$i")): _*)
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
     Similarity.centroidReport(Similarity.centroidFinish(
-      spark.read.parquet(ledger.path), dim))
+      mergedState(spark, streamParquet(spark, embeddingsSchema,
+          sourceDir.getOrElse(dir), sourceGlob, maxFilesPerTrigger),
+          "labcent", "sums", stateRoot)(
+        Similarity.centroidSumsOf(_, dim))(
+        _.groupBy(col("label")).agg(sum(col("n_vecs")).as("n_vecs"),
+          (1 to dim).map(i => sum(col(s"s$i")).as(s"s$i")): _*)),
+      dim))
   }
 
   /** Streaming transition matrix (q269): q198 per micro-batch. A
@@ -2935,7 +2584,7 @@ object StreamingOps {
     graft.operators.Sessionize.transitionProbs(
       sharedEventsState(spark, dir, "transition_counts", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        transitionCountState(spark, dir, "transitions", sourceDir,
+        transitionCountState(_, dir, "transitions", sourceDir,
           sourceGlob, maxFilesPerTrigger, stateRoot)))
       .orderBy(col("from_type"), col("to_type"))
 
@@ -2952,7 +2601,7 @@ object StreamingOps {
     graft.operators.Sessionize.stationaryFromCounts(spark,
       sharedEventsState(spark, dir, "transition_counts", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        transitionCountState(spark, dir, "markov", sourceDir,
+        transitionCountState(_, dir, "markov", sourceDir,
           sourceGlob, maxFilesPerTrigger, stateRoot)))
 
   /** The shared stateful core behind q269/q343: the (from, to, n)
@@ -2974,44 +2623,31 @@ object StreamingOps {
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, lastRoot).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue && !lastLedger.isEmpty)
-          existingStateMax(ss, lastLedger.path, "event_id")
-            .foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax,
-          idCol = "event_id")
-        root.foreach(_ => writeBatchMarker(ss, lastRoot, id))
-        val ev = batch.toDF()
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"))
-          .withColumn("is_state", lit(0))
-        val synth = lastEventAnchors(ss, lastLedger, ev)
-        val bCounts = graft.operators.Sessionize
-          .transitionPairs(ev.unionByName(synth))
-          .groupBy(col("from_type"), col("to_type"))
-          .agg(count(lit(1)).as("n"))
-        // counts first (non-idempotent sum-merge), anchors second: a
-        // crash between the two commits replays exactly
-        if (!cntLedger.isReplayed(id)) {
-          val merged =
-            if (cntLedger.isEmpty) bCounts
-            else ss.read.parquet(cntLedger.path)
-              .unionByName(bCounts)
-              .groupBy(col("from_type"), col("to_type"))
-              .agg(sum(col("n")).as("n"))
-          cntLedger.write(merged, id)
-        }
-        foldLastEvents(ss, lastLedger, ev, id, keys = Seq("user_id"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, lastRoot).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue && !lastLedger.isEmpty)
+        existingStateMax(ss, lastLedger.path, "event_id")
+          .foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax,
+        idCol = "event_id")
+      root.foreach(_ => writeBatchMarker(ss, lastRoot, id))
+      val ev = batch
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"))
+        .withColumn("is_state", lit(0))
+      val synth = lastEventAnchors(ss, lastLedger, ev)
+      val bCounts = graft.operators.Sessionize
+        .transitionPairs(ev.unionByName(synth))
+        .groupBy(col("from_type"), col("to_type"))
+        .agg(count(lit(1)).as("n"))
+      // counts first (non-idempotent sum-merge), anchors second: a
+      // crash between the two commits replays exactly
+      cntLedger.fold(id, bCounts)(_.groupBy(col("from_type"), col("to_type"))
+        .agg(sum(col("n")).as("n")))
+      foldLastEvents(ss, lastLedger, ev, id, keys = Seq("user_id"))
+    }
     spark.read.parquet(cntLedger.path)
   }
 
@@ -3061,43 +2697,10 @@ object StreamingOps {
       sourceDir: String,
       sourceGlob: String,
       maxFilesPerTrigger: Option[Int],
-      stateRoot: Option[String]): DataFrame = {
-    val root = effectiveRoot(stateRoot, op)
-    val cntRoot = stateDir(root, "counts")
-    val ledger = new VersionedLedger(spark, cntRoot, root)
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bCounts = stat(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bCounts
-            else ss.read.parquet(ledger.path)
-              .unionByName(bCounts)
-              .groupBy(keys.map(col): _*)
-              .agg(sum(col("cnt")).as("cnt"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
-  }
+      stateRoot: Option[String]): DataFrame =
+    mergedState(spark, streamParquet(spark, docsSchema, sourceDir,
+        sourceGlob, maxFilesPerTrigger), op, "counts", stateRoot)(stat)(
+      _.groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt")))
 
   /** Streaming bigram-entropy maintenance (q306): q305 per
     * micro-batch — the (source, w1, w2) count grain sum-merges
@@ -3510,39 +3113,16 @@ object StreamingOps {
       sourceDir: Option[String],
       sourceGlob: String,
       maxFilesPerTrigger: Option[Int],
-      stateRoot: Option[String]): DataFrame = {
-    val root = effectiveRoot(stateRoot, op)
-    val sumsRoot = stateDir(root, "sums")
-    val ledger = new VersionedLedger(spark, sumsRoot, root)
-    val schema = Tables.read(spark, dir, "lineitem").schema
-    val reader = spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val b = stat(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) b
-            else merge(ss.read.parquet(ledger.path).unionByName(b))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
-  }
+      stateRoot: Option[String]): DataFrame =
+    mergedState(spark, streamParquet(spark,
+        Tables.read(spark, dir, "lineitem").schema,
+        sourceDir.getOrElse(dir), sourceGlob, maxFilesPerTrigger),
+      op, "sums", stateRoot)(stat)(merge)
 
   /** Events sibling of [[lineitemState]]: an arbitrary mergeable
-    * statistic over the events stream through a gated ledger — see
-    * [[lineitemState]] for the merge/replay contract.
+    * statistic over the events stream through a gated ledger in
+    * `<root>/<table>` — see [[lineitemState]] for the merge/replay
+    * contract.
     */
   private def eventsMergedState(spark: SparkSession, dir: String,
       op: String,
@@ -3551,30 +3131,10 @@ object StreamingOps {
       sourceDir: Option[String],
       sourceGlob: String,
       maxFilesPerTrigger: Option[Int],
-      stateRoot: Option[String]): DataFrame = {
-    val root = effectiveRoot(stateRoot, op)
-    val sumsRoot = stateDir(root, "sums")
-    val ledger = new VersionedLedger(spark, sumsRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val b = stat(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) b
-            else merge(ss.read.parquet(ledger.path).unionByName(b))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
-  }
+      stateRoot: Option[String],
+      table: String = "sums"): DataFrame =
+    mergedState(spark, streamEvents(spark, dir, sourceGlob,
+        maxFilesPerTrigger, sourceDir), op, table, stateRoot)(stat)(merge)
 
   /** Streaming OHLC maintenance (q329): q328 per micro-batch — the
     * per-cell (open-struct, close-struct, high, low, volume, count)
@@ -3819,8 +3379,8 @@ object StreamingOps {
       maxFilesPerTrigger: Option[Int],
       stateRoot: Option[String]): DataFrame = {
     import graft.operators.Basket
-    def live(liveOp: String) = lineitemState(spark, dir, liveOp,
-      b => Basket.orderBrands(spark, dir, b),
+    def live(ss: SparkSession, liveOp: String) = lineitemState(ss, dir,
+      liveOp, b => Basket.orderBrands(ss, dir, b),
       _.distinct(), sourceDir, sourceGlob, maxFilesPerTrigger,
       stateRoot)
     if (sourceDir.isEmpty && maxFilesPerTrigger.isEmpty &&
@@ -3832,8 +3392,8 @@ object StreamingOps {
           Seq("p_partkey", "p_brand"))))
       LedgerArtifacts.sharedTable(spark,
         s"order_brands_${LedgerArtifacts.dirKey(dir)}", fp)(
-        atStateParallelism(spark)(live("basket_shared")))
-    } else live(op)
+        live(ChildSessions.withConfs(spark, StateWidth), "basket_shared"))
+    } else live(spark, op)
   }
 
   /** Streaming Benford audit (q341): q334 per micro-batch on the
@@ -3892,7 +3452,7 @@ object StreamingOps {
     graft.operators.Lifecycle.conversionFromStats(
       sharedEventsState(spark, dir, "rfm_state", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        rfmState(spark, dir, "segconv", sourceDir, sourceGlob,
+        rfmState(_, dir, "segconv", sourceDir, sourceGlob,
           maxFilesPerTrigger, stateRoot)))
 
   /** Streaming Heaps'-law maintenance (q314): q205 per micro-batch —
@@ -3923,59 +3483,29 @@ object StreamingOps {
     val offLedger = new VersionedLedger(spark, offRoot, root)
     val lastBatchId = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, fpRoot).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue && !offLedger.isEmpty)
-          existingStateMax(ss, offLedger.path, "max_doc")
-            .foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax,
-          idCol = "doc_id")
-        root.foreach(_ => writeBatchMarker(ss, fpRoot, id))
-        val offset =
-          if (offLedger.isEmpty) 0L
-          else ss.read.parquet(offLedger.path)
-            .agg(sum(col("n_tokens"))).collect()(0).getLong(0)
-        val (bFirst, bTot) =
-          TextOps.firstPositions(ss, batch.toDF(), offset)
-        if (!fpLedger.isReplayed(id)) {
-          val merged =
-            if (fpLedger.isEmpty) bFirst
-            else ss.read.parquet(fpLedger.path)
-              .unionByName(bFirst)
-              .groupBy(col("token"))
-              .agg(min(col("first_pos")).as("first_pos"))
-          fpLedger.write(merged, id)
-        }
-        if (!offLedger.isReplayed(id)) {
-          val merged =
-            if (offLedger.isEmpty) bTot
-            else ss.read.parquet(offLedger.path)
-              .unionByName(bTot)
-              .agg(sum(col("n_tokens")).as("n_tokens"),
-                max(col("max_doc")).as("max_doc"))
-          offLedger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, fpRoot).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue && !offLedger.isEmpty)
+        existingStateMax(ss, offLedger.path, "max_doc")
+          .foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax,
+        idCol = "doc_id")
+      root.foreach(_ => writeBatchMarker(ss, fpRoot, id))
+      val offset =
+        if (offLedger.isEmpty) 0L
+        else ss.read.parquet(offLedger.path)
+          .agg(sum(col("n_tokens"))).collect()(0).getLong(0)
+      val (bFirst, bTot) =
+        TextOps.firstPositions(ss, batch, offset)
+      fpLedger.fold(id, bFirst)(_.groupBy(col("token"))
+        .agg(min(col("first_pos")).as("first_pos")))
+      offLedger.fold(id, bTot)(_.agg(sum(col("n_tokens")).as("n_tokens"),
+        max(col("max_doc")).as("max_doc")))
+    }
     TextOps.heapsFinish(spark,
       spark.read.parquet(fpLedger.path),
       spark.read.parquet(offLedger.path)
@@ -4006,33 +3536,12 @@ object StreamingOps {
       sourceDir: Option[String] = None,
       sourceGlob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None,
-      stateRoot: Option[String] = None): DataFrame = {
-    val root = effectiveRoot(stateRoot, "retention")
-    val udRoot = stateDir(root, "user_days")
-    val ledger = new VersionedLedger(spark, udRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bPairs = graft.operators.Analytics.activityOf(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bPairs
-            else ss.read.parquet(ledger.path)
-              .unionByName(bPairs)
-              .distinct()
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+      stateRoot: Option[String] = None): DataFrame =
     graft.operators.Analytics.cohortTriangleOf(
-      spark.read.parquet(ledger.path))
-  }
+      eventsMergedState(spark, dir, "retention",
+        graft.operators.Analytics.activityOf,
+        _.distinct(),
+        sourceDir, sourceGlob, maxFilesPerTrigger, stateRoot, "user_days"))
 
   /** Streaming RFM maintenance (q279): q274 per micro-batch. The
     * per-user (last_day, n_events, cents) triple is the mergeable
@@ -4059,7 +3568,7 @@ object StreamingOps {
     graft.operators.Lifecycle.rfmReport(
       sharedEventsState(spark, dir, "rfm_state", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        rfmState(spark, dir, "rfm", sourceDir, sourceGlob,
+        rfmState(_, dir, "rfm", sourceDir, sourceGlob,
           maxFilesPerTrigger, stateRoot)))
 
   /** The shared stateful core behind q279/q303: the per-user
@@ -4071,36 +3580,15 @@ object StreamingOps {
       sourceDir: Option[String],
       sourceGlob: String,
       maxFilesPerTrigger: Option[Int],
-      stateRoot: Option[String]): DataFrame = {
-    val root = effectiveRoot(stateRoot, op)
-    val statsRoot = stateDir(root, "user_stats")
-    val ledger = new VersionedLedger(spark, statsRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bStats = graft.operators.Lifecycle.rfmStatsOf(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bStats
-            else ss.read.parquet(ledger.path)
-              .unionByName(bStats)
-              .groupBy(col("user_id"))
-              .agg(max(col("last_day")).as("last_day"),
-                sum(col("n_events")).as("n_events"),
-                sum(col("cents")).as("cents"),
-                max(col("converted")).as("converted"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
-  }
+      stateRoot: Option[String]): DataFrame =
+    eventsMergedState(spark, dir, op,
+      graft.operators.Lifecycle.rfmStatsOf,
+      _.groupBy(col("user_id"))
+        .agg(max(col("last_day")).as("last_day"),
+          sum(col("n_events")).as("n_events"),
+          sum(col("cents")).as("cents"),
+          max(col("converted")).as("converted")),
+      sourceDir, sourceGlob, maxFilesPerTrigger, stateRoot, "user_stats")
 
   /** Streaming session-funnel maintenance (q277): q144 per
     * micro-batch — the capstone of the behavioral twins. Two state
@@ -4160,7 +3648,7 @@ object StreamingOps {
   private def sharedEventsState(spark: SparkSession, dir: String,
       name: String, sourceDir: Option[String], sourceGlob: String,
       maxFilesPerTrigger: Option[Int], stateRoot: Option[String])(
-      live: => DataFrame): DataFrame =
+      live: SparkSession => DataFrame): DataFrame =
     if (sourceDir.isEmpty && maxFilesPerTrigger.isEmpty &&
         stateRoot.isEmpty && sourceGlob == "events.parquet") {
       // fingerprint EVERY column the state folds consume (ts /
@@ -4173,14 +3661,15 @@ object StreamingOps {
         Tables.events(spark, dir).select(cols.map(col): _*), cols)
       LedgerArtifacts.sharedTable(spark,
         s"${name}_${LedgerArtifacts.dirKey(dir)}",
-        s"${fp._1}_${fp._2}")(atStateParallelism(spark)(live))
-    } else live
+        s"${fp._1}_${fp._2}")(
+        live(ChildSessions.withConfs(spark, StateWidth)))
+    } else live(spark)
 
   private def funnelStagesShared(spark: SparkSession,
       dir: String): DataFrame =
     sharedEventsState(spark, dir, "funnel_stages", None,
       "events.parquet", None, None)(
-      funnelStages(spark, dir, "funnel_shared", None, "events.parquet",
+      funnelStages(_, dir, "funnel_shared", None, "events.parquet",
         None, None))
 
   private def funnelStagesFor(spark: SparkSession, dir: String,
@@ -4273,34 +3762,14 @@ object StreamingOps {
       sourceDir: Option[String] = None,
       sourceGlob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None,
-      stateRoot: Option[String] = None): DataFrame = {
-    val root = effectiveRoot(stateRoot, "ltv")
-    val udcRoot = stateDir(root, "user_day_cents")
-    val ledger = new VersionedLedger(spark, udcRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bUdc = graft.operators.Lifecycle.userDayCentsOf(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bUdc
-            else ss.read.parquet(ledger.path)
-              .unionByName(bUdc)
-              .groupBy(col("user_id"), col("day"))
-              .agg(sum(col("cents")).as("cents"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+      stateRoot: Option[String] = None): DataFrame =
     graft.operators.Lifecycle.ltvOf(
-      spark.read.parquet(ledger.path))
-  }
+      eventsMergedState(spark, dir, "ltv",
+        graft.operators.Lifecycle.userDayCentsOf,
+        _.groupBy(col("user_id"), col("day"))
+          .agg(sum(col("cents")).as("cents")),
+        sourceDir, sourceGlob, maxFilesPerTrigger, stateRoot,
+        "user_day_cents"))
 
   /** The shared stateful core behind q277 / q283 / q285: maintains
     * per-user session ANCHORS and the per-(user, session) grain —
@@ -4324,128 +3793,115 @@ object StreamingOps {
     val seenMax = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
       sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        import org.apache.spark.sql.expressions.Window
-        if (lastBatchId.get == Long.MinValue)
-          batchMarkerMax(ss, anchorsRoot).foreach(lastBatchId.set)
-        if (seenMax.get == Long.MinValue && !anchorsLedger.isEmpty)
-          existingStateMax(ss, anchorsLedger.path, "last_event_id")
-            .foreach(seenMax.set)
-        batchOrderGuard(batch.toDF(), id, lastBatchId, seenMax,
-          idCol = "event_id")
-        root.foreach(_ => writeBatchMarker(ss, anchorsRoot, id))
-        val bev = batch.toDF()
-          .select(col("user_id"), col("ts"), col("event_id"),
-            col("event_type"), lit(0).as("is_state"),
-            lit(null).cast("long").as("base"))
-        val anchors =
-          if (anchorsLedger.isEmpty) bev.limit(0)
-          else ss.read.parquet(anchorsLedger.path)
-            .select(col("user_id"), col("last_ts").as("ts"),
-              col("last_event_id").as("event_id"),
-              lit("__anchor").as("event_type"), lit(1).as("is_state"),
-              col("cur_session").as("base"))
-        val byUser = Window.partitionBy(col("user_id"))
-          .orderBy(col("ts"), col("event_id"))
-        val assigned = bev.unionByName(anchors)
-          .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-          .withColumn("new_session",
-            when(col("is_state") === 1, lit(0L))
-              .when(col("prev_ts").isNull ||
-                col("ts") > col("prev_ts") + expr("INTERVAL 30 MINUTES"),
-                lit(1L))
-              .otherwise(lit(0L)))
-          .withColumn("base0",
-            coalesce(max(col("base")).over(
-              Window.partitionBy(col("user_id"))), lit(0L)))
-          .withColumn("session_id", col("base0") +
-            sum(col("new_session")).over(Window.partitionBy(col("user_id"))
-              .orderBy(col("ts"), col("event_id"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .filter(col("is_state") === 0)
-          .select(col("user_id"), col("session_id"), col("event_type"),
-            col("event_id"), col("ts"))
-          .persist()
-        val keys = Seq("user_id", "session_id")
-        if (!stagesLedger.isReplayed(id)) {
-          val tsT = assigned.schema("ts").dataType.sql
-          val state =
-            if (stagesLedger.isEmpty)
-              assigned.select(col("user_id"), col("session_id"),
-                lit(null).cast("long").as("tv"),
-                lit(null).cast(tsT).as("tv_ts"),
-                lit(null).cast("long").as("tc"),
-                lit(null).cast(tsT).as("tc_ts"),
-                lit(null).cast("long").as("tp"),
-                lit(null).cast(tsT).as("tp_ts"),
-                lit(null).cast("long").as("n_events"),
-                lit(null).cast(tsT).as("first_ts"),
-                lit(null).cast(tsT).as("last_ts")).limit(0)
-            else ss.read.parquet(stagesLedger.path)
-          val bn = assigned.groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("bn"), min(col("ts")).as("bft"),
-              max(col("ts")).as("blt"))
-          val base = state.join(bn, keys, "full_outer")
-            .withColumn("ne2", coalesce(col("n_events"), lit(0L)) +
-              coalesce(col("bn"), lit(0L)))
-            // session endpoint min/max-merge (least/greatest skip nulls)
-            .withColumn("ft2", least(col("first_ts"), col("bft")))
-            .withColumn("lt2", greatest(col("last_ts"), col("blt")))
-          val bv = assigned.filter(col("event_type") === "view")
-            .groupBy(keys.map(col): _*)
-            .agg(min(col("event_id")).as("bv"), min(col("ts")).as("bv_ts"))
-          val m1 = base.join(bv, keys, "left")
-            .withColumn("tv2", coalesce(col("tv"), col("bv")))
-            .withColumn("tv2_ts", coalesce(col("tv_ts"), col("bv_ts")))
-          val bc = assigned.filter(col("event_type") === "click")
-            .join(m1.select(col("user_id"), col("session_id"),
-              col("tv2")), keys)
-            .filter(col("event_id") > col("tv2"))
-            .groupBy(keys.map(col): _*)
-            .agg(min(col("event_id")).as("bc"), min(col("ts")).as("bc_ts"))
-          val m2 = m1.join(bc, keys, "left")
-            .withColumn("tc2", coalesce(col("tc"), col("bc")))
-            .withColumn("tc2_ts", coalesce(col("tc_ts"), col("bc_ts")))
-          val bp = assigned.filter(col("event_type") === "purchase")
-            .join(m2.select(col("user_id"), col("session_id"),
-              col("tc2")), keys)
-            .filter(col("event_id") > col("tc2"))
-            .groupBy(keys.map(col): _*)
-            .agg(min(col("event_id")).as("bp"), min(col("ts")).as("bp_ts"))
-          val m3 = m2.join(bp, keys, "left")
-            .withColumn("tp2", coalesce(col("tp"), col("bp")))
-            .withColumn("tp2_ts", coalesce(col("tp_ts"), col("bp_ts")))
-          stagesLedger.write(m3.select(col("user_id"), col("session_id"),
-            col("tv2").as("tv"), col("tv2_ts").as("tv_ts"),
-            col("tc2").as("tc"), col("tc2_ts").as("tc_ts"),
-            col("tp2").as("tp"), col("tp2_ts").as("tp_ts"),
-            col("ne2").as("n_events"),
-            col("ft2").as("first_ts"), col("lt2").as("last_ts")), id)
-        }
-        if (!anchorsLedger.isReplayed(id)) {
-          val bAnch = assigned.groupBy(col("user_id"))
-            .agg(max(col("ts")).as("last_ts"),
-              max(col("event_id")).as("last_event_id"),
-              max(col("session_id")).as("cur_session"))
-          val merged =
-            if (anchorsLedger.isEmpty) bAnch
-            else ss.read.parquet(anchorsLedger.path)
-              .unionByName(bAnch)
-              .groupBy(col("user_id"))
-              .agg(max(col("last_ts")).as("last_ts"),
-                max(col("last_event_id")).as("last_event_id"),
-                max(col("cur_session")).as("cur_session"))
-          anchorsLedger.write(merged, id)
-        }
-        assigned.unpersist()
-        ()
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      import org.apache.spark.sql.expressions.Window
+      if (lastBatchId.get == Long.MinValue)
+        batchMarkerMax(ss, anchorsRoot).foreach(lastBatchId.set)
+      if (seenMax.get == Long.MinValue && !anchorsLedger.isEmpty)
+        existingStateMax(ss, anchorsLedger.path, "last_event_id")
+          .foreach(seenMax.set)
+      batchOrderGuard(batch, id, lastBatchId, seenMax,
+        idCol = "event_id")
+      root.foreach(_ => writeBatchMarker(ss, anchorsRoot, id))
+      val bev = batch
+        .select(col("user_id"), col("ts"), col("event_id"),
+          col("event_type"), lit(0).as("is_state"),
+          lit(null).cast("long").as("base"))
+      val anchors =
+        if (anchorsLedger.isEmpty) bev.limit(0)
+        else ss.read.parquet(anchorsLedger.path)
+          .select(col("user_id"), col("last_ts").as("ts"),
+            col("last_event_id").as("event_id"),
+            lit("__anchor").as("event_type"), lit(1).as("is_state"),
+            col("cur_session").as("base"))
+      val byUser = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      val assigned = bev.unionByName(anchors)
+        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+        .withColumn("new_session",
+          when(col("is_state") === 1, lit(0L))
+            .when(col("prev_ts").isNull ||
+              col("ts") > col("prev_ts") + expr("INTERVAL 30 MINUTES"),
+              lit(1L))
+            .otherwise(lit(0L)))
+        .withColumn("base0",
+          coalesce(max(col("base")).over(
+            Window.partitionBy(col("user_id"))), lit(0L)))
+        .withColumn("session_id", col("base0") +
+          sum(col("new_session")).over(Window.partitionBy(col("user_id"))
+            .orderBy(col("ts"), col("event_id"))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .filter(col("is_state") === 0)
+        .select(col("user_id"), col("session_id"), col("event_type"),
+          col("event_id"), col("ts"))
+        .persist()
+      val keys = Seq("user_id", "session_id")
+      if (!stagesLedger.isReplayed(id)) {
+        val tsT = assigned.schema("ts").dataType.sql
+        val state =
+          if (stagesLedger.isEmpty)
+            assigned.select(col("user_id"), col("session_id"),
+              lit(null).cast("long").as("tv"),
+              lit(null).cast(tsT).as("tv_ts"),
+              lit(null).cast("long").as("tc"),
+              lit(null).cast(tsT).as("tc_ts"),
+              lit(null).cast("long").as("tp"),
+              lit(null).cast(tsT).as("tp_ts"),
+              lit(null).cast("long").as("n_events"),
+              lit(null).cast(tsT).as("first_ts"),
+              lit(null).cast(tsT).as("last_ts")).limit(0)
+          else ss.read.parquet(stagesLedger.path)
+        val bn = assigned.groupBy(keys.map(col): _*)
+          .agg(count(lit(1)).as("bn"), min(col("ts")).as("bft"),
+            max(col("ts")).as("blt"))
+        val base = state.join(bn, keys, "full_outer")
+          .withColumn("ne2", coalesce(col("n_events"), lit(0L)) +
+            coalesce(col("bn"), lit(0L)))
+          // session endpoint min/max-merge (least/greatest skip nulls)
+          .withColumn("ft2", least(col("first_ts"), col("bft")))
+          .withColumn("lt2", greatest(col("last_ts"), col("blt")))
+        val bv = assigned.filter(col("event_type") === "view")
+          .groupBy(keys.map(col): _*)
+          .agg(min(col("event_id")).as("bv"), min(col("ts")).as("bv_ts"))
+        val m1 = base.join(bv, keys, "left")
+          .withColumn("tv2", coalesce(col("tv"), col("bv")))
+          .withColumn("tv2_ts", coalesce(col("tv_ts"), col("bv_ts")))
+        val bc = assigned.filter(col("event_type") === "click")
+          .join(m1.select(col("user_id"), col("session_id"),
+            col("tv2")), keys)
+          .filter(col("event_id") > col("tv2"))
+          .groupBy(keys.map(col): _*)
+          .agg(min(col("event_id")).as("bc"), min(col("ts")).as("bc_ts"))
+        val m2 = m1.join(bc, keys, "left")
+          .withColumn("tc2", coalesce(col("tc"), col("bc")))
+          .withColumn("tc2_ts", coalesce(col("tc_ts"), col("bc_ts")))
+        val bp = assigned.filter(col("event_type") === "purchase")
+          .join(m2.select(col("user_id"), col("session_id"),
+            col("tc2")), keys)
+          .filter(col("event_id") > col("tc2"))
+          .groupBy(keys.map(col): _*)
+          .agg(min(col("event_id")).as("bp"), min(col("ts")).as("bp_ts"))
+        val m3 = m2.join(bp, keys, "left")
+          .withColumn("tp2", coalesce(col("tp"), col("bp")))
+          .withColumn("tp2_ts", coalesce(col("tp_ts"), col("bp_ts")))
+        stagesLedger.write(m3.select(col("user_id"), col("session_id"),
+          col("tv2").as("tv"), col("tv2_ts").as("tv_ts"),
+          col("tc2").as("tc"), col("tc2_ts").as("tc_ts"),
+          col("tp2").as("tp"), col("tp2_ts").as("tp_ts"),
+          col("ne2").as("n_events"),
+          col("ft2").as("first_ts"), col("lt2").as("last_ts")), id)
       }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+      anchorsLedger.fold(id, assigned.groupBy(col("user_id"))
+          .agg(max(col("ts")).as("last_ts"),
+            max(col("event_id")).as("last_event_id"),
+            max(col("session_id")).as("cur_session")))(
+        _.groupBy(col("user_id"))
+          .agg(max(col("last_ts")).as("last_ts"),
+            max(col("last_event_id")).as("last_event_id"),
+            max(col("cur_session")).as("cur_session")))
+      assigned.unpersist()
+    }
     spark.read.parquet(stagesLedger.path)
   }
 
@@ -4468,35 +3924,14 @@ object StreamingOps {
       sourceDir: Option[String] = None,
       sourceGlob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None,
-      stateRoot: Option[String] = None): DataFrame = {
-    val root = effectiveRoot(stateRoot, "survival")
-    val spansRoot = stateDir(root, "user_spans")
-    val ledger = new VersionedLedger(spark, spansRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bSpans = graft.operators.Lifecycle.spansOf(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bSpans
-            else ss.read.parquet(ledger.path)
-              .unionByName(bSpans)
-              .groupBy(col("user_id"))
-              .agg(min(col("first_day")).as("first_day"),
-                max(col("last_day")).as("last_day"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+      stateRoot: Option[String] = None): DataFrame =
     graft.operators.Lifecycle.survivalOf(
-      spark.read.parquet(ledger.path))
-  }
+      eventsMergedState(spark, dir, "survival",
+        graft.operators.Lifecycle.spansOf,
+        _.groupBy(col("user_id"))
+          .agg(min(col("first_day")).as("first_day"),
+            max(col("last_day")).as("last_day")),
+        sourceDir, sourceGlob, maxFilesPerTrigger, stateRoot, "user_spans"))
 
   /** The shared stateful core behind q296/q297: maintains the
     * (event_type, epoch-day, count) grain —
@@ -4516,33 +3951,12 @@ object StreamingOps {
       sourceDir: Option[String],
       sourceGlob: String,
       maxFilesPerTrigger: Option[Int],
-      stateRoot: Option[String]): DataFrame = {
-    val root = effectiveRoot(stateRoot, op)
-    val dcRoot = stateDir(root, "daily_counts")
-    val ledger = new VersionedLedger(spark, dcRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bDaily = graft.operators.Lifecycle.dailyCountsOf(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bDaily
-            else ss.read.parquet(ledger.path)
-              .unionByName(bDaily)
-              .groupBy(col("event_type"), col("day"))
-              .agg(sum(col("n")).as("n"))
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
-  }
+      stateRoot: Option[String]): DataFrame =
+    eventsMergedState(spark, dir, op,
+      graft.operators.Lifecycle.dailyCountsOf,
+      _.groupBy(col("event_type"), col("day"))
+        .agg(sum(col("n")).as("n")),
+      sourceDir, sourceGlob, maxFilesPerTrigger, stateRoot, "daily_counts")
 
   /** Streaming CUSUM maintenance (q296): q292 per micro-batch — the
     * drain runs [[graft.operators.Lifecycle.cusumOf]] (dense grid +
@@ -4557,7 +3971,7 @@ object StreamingOps {
     graft.operators.Lifecycle.cusumOf(
       sharedEventsState(spark, dir, "daily_counts", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        dailyCountState(spark, dir, "cusum", sourceDir, sourceGlob,
+        dailyCountState(_, dir, "cusum", sourceDir, sourceGlob,
           maxFilesPerTrigger, stateRoot)))
 
   /** Streaming weekday-baseline maintenance (q297): q281 per
@@ -4574,7 +3988,7 @@ object StreamingOps {
     graft.operators.Lifecycle.seasonalOf(
       sharedEventsState(spark, dir, "daily_counts", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        dailyCountState(spark, dir, "seasonal", sourceDir, sourceGlob,
+        dailyCountState(_, dir, "seasonal", sourceDir, sourceGlob,
           maxFilesPerTrigger, stateRoot)))
 
   /** Streaming concurrency maintenance (q298): q290 per micro-batch.
@@ -4620,32 +4034,11 @@ object StreamingOps {
       sourceDir: Option[String],
       sourceGlob: String,
       maxFilesPerTrigger: Option[Int],
-      stateRoot: Option[String]): DataFrame = {
-    val root = effectiveRoot(stateRoot, op)
-    val udRoot = stateDir(root, "user_days")
-    val ledger = new VersionedLedger(spark, udRoot, root)
-    val stream = streamEvents(spark, dir, sourceGlob, maxFilesPerTrigger,
-      sourceDir)
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val bUd = graft.operators.Lifecycle.userDays(batch.toDF())
-          val merged =
-            if (ledger.isEmpty) bUd
-            else ss.read.parquet(ledger.path)
-              .unionByName(bUd)
-              .distinct()
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
-    spark.read.parquet(ledger.path)
-  }
+      stateRoot: Option[String]): DataFrame =
+    eventsMergedState(spark, dir, op,
+      graft.operators.Lifecycle.userDays,
+      _.distinct(),
+      sourceDir, sourceGlob, maxFilesPerTrigger, stateRoot, "user_days")
 
   /** Streaming growth accounting (q300): q273 per micro-batch — the
     * drain runs [[graft.operators.Lifecycle.growthOf]] (the lag+lead
@@ -4660,7 +4053,7 @@ object StreamingOps {
     graft.operators.Lifecycle.growthOf(
       sharedEventsState(spark, dir, "user_days", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        userDayState(spark, dir, "growth", sourceDir, sourceGlob,
+        userDayState(_, dir, "growth", sourceDir, sourceGlob,
           maxFilesPerTrigger, stateRoot)))
 
   /** Streaming DAU/WAU stickiness (q301): q275 per micro-batch — the
@@ -4675,7 +4068,7 @@ object StreamingOps {
     graft.operators.Lifecycle.stickinessOf(
       sharedEventsState(spark, dir, "user_days", sourceDir,
         sourceGlob, maxFilesPerTrigger, stateRoot)(
-        userDayState(spark, dir, "stickiness", sourceDir, sourceGlob,
+        userDayState(_, dir, "stickiness", sourceDir, sourceGlob,
           maxFilesPerTrigger, stateRoot)))
 
   /** Streaming HLL cell maintenance (q302): q234 per micro-batch —
@@ -4699,36 +4092,18 @@ object StreamingOps {
     import graft.sources.Tables
     val root = effectiveRoot(stateRoot, "hll_cells")
     val stateTab = stateDir(root, "registers")
-    val docsSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("lang", StringType),
-      StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val reader = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", sourceGlob)
-    maxFilesPerTrigger.foreach(m =>
-      reader.option("maxFilesPerTrigger", m.toString))
-    val stream = reader.parquet(sourceDir.getOrElse(dir))
-    graft.Caches.onRelease(
-      () => org.apache.spark.sql.graft.SessionHygiene.unloadStateStores())
-    val w = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        StreamState.recover(ss, stateTab)
-        TextOps.hllRegsKeyed(batch.toDF()
-            .select(col("source"), col("lang"),
-              md5(col("text").cast("binary")).as("h")),
-            Seq("source", "lang"))
-          .write.mode("append").parquet(stateTab)
-        StreamState.maybeCompact(ss, stateTab, tag = "hll_cells/registers")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    val q = startWithCheckpoint(w, root)
-    q.awaitTermination()
+    val stream = streamDocuments(spark, dir, sourceGlob,
+      maxFilesPerTrigger, sourceDir)
+    drain(stream, root) { (batch, id) =>
+      val ss = batch.sparkSession
+      StreamState.recover(ss, stateTab)
+      TextOps.hllRegsKeyed(batch
+          .select(col("source"), col("lang"),
+            md5(col("text").cast("binary")).as("h")),
+          Seq("source", "lang"))
+        .write.mode("append").parquet(stateTab)
+      StreamState.maybeCompact(ss, stateTab, tag = "hll_cells/registers")
+    }
     val regSchema = StructType(Seq(
       StructField("source", StringType),
       StructField("lang", StringType),
@@ -4763,7 +4138,7 @@ object StreamingOps {
     import graft.operators.Audit
     val st = sharedEventsState(spark, dir, "rfm_state", sourceDir,
       sourceGlob, maxFilesPerTrigger, stateRoot)(
-      rfmState(spark, dir, "gini", sourceDir, sourceGlob,
+      rfmState(_, dir, "gini", sourceDir, sourceGlob,
         maxFilesPerTrigger, stateRoot))
     val ordCounts = graft.sources.Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))

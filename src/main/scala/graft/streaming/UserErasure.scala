@@ -2,9 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
@@ -88,6 +87,11 @@ object UserErasure {
     StructField("event_type", StringType),
     StructField("ts", TimestampNTZType)))
 
+  /** The id-range event split at `streamDir`, one file per batch. */
+  private def eventStream(spark: SparkSession, streamDir: String) =
+    StreamingOps.streamParquet(spark, evSchema, streamDir, "*.parquet",
+      Some(1))
+
   /** The events registry ledger: (event_id, user_id, event_type, ts)
     * maintained over the deterministic 3-batch event_id-range split,
     * every fold anti-joined against the USER tombstones, then the
@@ -119,27 +123,13 @@ object UserErasure {
     val ledgerRoot = s"$root/state"
     val ledger =
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
-    val stream = spark.readStream.schema(evSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val rows = Erasure.applyTombstones(ss, ledgerRoot,
-            batch.select(col("doc_id").as("event_id"), col("user_id"),
-              col("event_type"), col("ts")),
-            keyCol = "user_id")
-          val merged =
-            if (ledger.isEmpty) rows
-            else ss.read.parquet(ledger.path).unionByName(rows)
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    StreamingOps.drain(eventStream(spark, streamDir), Some(root)) {
+      (batch, id) =>
+        ledger.fold(id, Erasure.applyTombstones(batch.sparkSession,
+          ledgerRoot, batch.select(col("doc_id").as("event_id"),
+            col("user_id"), col("event_type"), col("ts")),
+          keyCol = "user_id"))()
+    }
     Erasure.erase(spark, ledgerRoot,
       Tables.events(spark, dir).filter(erasedUser(col("user_id")))
         .select(col("user_id")).distinct(),
@@ -199,25 +189,11 @@ object UserErasure {
     val ledgerRoot = s"$root/state"
     val ledger =
       new StreamingOps.VersionedLedger(spark, ledgerRoot, Some(root))
-    val stream = spark.readStream.schema(evSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-    val w = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: Dataset[Row], id: Long) =>
-        val ss = batch.sparkSession
-        if (!ledger.isReplayed(id)) {
-          val rows = batch.select(col("doc_id").as("event_id"),
-            col("user_id"), col("event_type"), col("ts"))
-          val merged =
-            if (ledger.isEmpty) rows
-            else ss.read.parquet(ledger.path).unionByName(rows)
-          ledger.write(merged, id)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-    StreamingOps.startWithCheckpoint(w, Some(root)).awaitTermination()
+    StreamingOps.drain(eventStream(spark, streamDir), Some(root)) {
+      (batch, id) =>
+        ledger.fold(id, batch.select(col("doc_id").as("event_id"),
+          col("user_id"), col("event_type"), col("ts")))()
+    }
     Erasure.retire(spark, ledgerRoot,
       col("ts") >= lit(cutoff).cast("timestamp_ntz"))
     val (_, _, path) = Provenance.committedVersions(spark, ledgerRoot)
