@@ -39,6 +39,8 @@ object ChildSessions {
   import org.apache.spark.scheduler.SparkListenerInterface
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+  import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+  import org.apache.spark.sql.streaming.StreamingQuery
 
   /** A child of `spark` carrying `confs` on top of the parent's conf.
     * The parent's streaming listeners are registered on the child too,
@@ -63,18 +65,25 @@ object ChildSessions {
     org.apache.spark.sql.classic.Dataset.ofRows(castToImpl(session),
       castToImpl(df).logicalPlan)
 
-  /** Detach `child`'s streaming-listener bus from the SparkContext's
+  /** Detach `session`'s streaming-listener bus from the SparkContext's
     * listener bus. A session's stream manager registers that bus when
-    * it is built and never removes it, so a child per drain would leave
-    * one behind per drain. The manager keeps it in a private field;
-    * if that cannot be reached the bus stays, and nothing fails.
+    * it is built and never removes it, so a session per drain (a child
+    * here, and the per-query session every started stream runs its
+    * batches on) would leave one behind per drain. Call it once the
+    * session's streams are done. The manager keeps the bus in a private
+    * field; if that cannot be reached the bus stays, and nothing fails.
     */
-  private def release(child: SparkSession): Unit =
+  private def release(session: SparkSession): Unit =
     try {
-      val streams = castToImpl(child).streams
+      val streams = castToImpl(session).streams
       val f = streams.getClass.getDeclaredField("listenerBus")
       f.setAccessible(true)
-      child.sparkContext.removeSparkListener(
+      session.sparkContext.removeSparkListener(
         f.get(streams).asInstanceOf[SparkListenerInterface])
     } catch { case _: Exception => () }
+
+  /** [[release]] the session a finished stream ran its batches on. */
+  def releaseStream(q: StreamingQuery): Unit =
+    release(q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .sparkSessionForStream)
 }

@@ -6,21 +6,34 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, DynamicPruning, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
-import org.apache.spark.sql.execution.{FileSourceScanExec, PartitionedFileUtil, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, PartitionedFileUtil, SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.{FilePartition, FileSourceStrategy}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** Planner strategy: a V1 file scan that reads exactly ONE split
-  * reports `SinglePartition` instead of `UnknownPartitioning`.
+/** Planner strategy: a V1 file scan small enough to read in ONE task
+  * is planned to report `SinglePartition` instead of
+  * `UnknownPartitioning`.
   *
-  * A one-split scan runs as one task, so its output already IS a single
-  * partition — but Spark cannot see that, and puts a stage boundary
-  * above it for every distribution a parent asks for: the partial→final
-  * aggregate's `Exchange SinglePartition`, a `groupBy`'s hash exchange,
-  * an `orderBy`'s range exchange (plus the sampling job its
+  * Spark cannot see that a small scan's output is one partition's
+  * worth, and puts a stage boundary above it for every distribution a
+  * parent asks for: the partial→final aggregate's
+  * `Exchange SinglePartition`, a `groupBy`'s hash exchange, an
+  * `orderBy`'s range exchange (plus the sampling job its
   * `RangePartitioner` runs over the child). On small incremental
-  * batches each boundary costs more in AQE re-planning, stage set-up
-  * and job submission than the task inside it.
+  * batches — and on the few-file sinks a streaming drain reads back —
+  * each boundary costs more in AQE re-planning, stage set-up and job
+  * submission than the task inside it. One decision per scan, from
+  * Spark's own split planner:
+  *
+  *  - the listing packs into exactly one split: the scan is wrapped in
+  *    [[SingleSplitScanExec]], a pass-through (columnar stays columnar)
+  *    that only reports `SinglePartition`;
+  *  - the listing's `totalFileSize` is at most `maxSplitBytes` but it
+  *    still packs into several splits (with the default 4 MB
+  *    `openCostInBytes` every small file is its own split): the scan is
+  *    planned under Spark's `CoalesceExec(1, scan)`, which reads every
+  *    split in one task, in split order, and reports `SinglePartition`;
+  *  - anything larger is left alone.
   *
   * `SinglePartition` satisfies every distribution without a fixed
   * partition count, so EnsureRequirements plans no exchange there, and
@@ -36,8 +49,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * the Hadoop conf on every AQE re-plan. Bucketed scans (their
   * partitioning is the bucket layout) and scans carrying dynamic
   * partition-pruning filters (their listing is only known at run time)
-  * are left alone. Multi-split corpora never qualify, so the
-  * large-scale plan is untouched.
+  * are left alone. The bound is `maxSplitBytes` (at most
+  * `maxPartitionBytes`, a constant), so no task's input grows with
+  * corpus size, and multi-split corpora keep the large-scale plan.
   *
   * Registered with [[GraftExtensions]] (`injectPlannerStrategy`) or at
   * runtime via [[GraftFunctions.register]]
@@ -47,22 +61,28 @@ object SingleSplitScans extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] =
     FileSourceStrategy(plan).map(_.transformUp {
-      case s: FileSourceScanExec if readsOneSplit(s) => SingleSplitScanExec(s)
+      case s: FileSourceScanExec if eligible(s) => splitCount(s) match {
+        case Some(1) => SingleSplitScanExec(s)
+        case Some(n) if n > 1 => CoalesceExec(1, s)
+        case _ => s
+      }
     })
 
-  private[graft] def readsOneSplit(s: FileSourceScanExec): Boolean =
+  private def eligible(s: FileSourceScanExec): Boolean =
     s.relation.bucketSpec.isEmpty &&
-      !s.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning])) &&
-      splitCount(s) == 1
+      !s.partitionFilters.exists(_.exists(_.isInstanceOf[DynamicPruning]))
 
-  private def splitCount(s: FileSourceScanExec): Int = {
+  /** The number of FilePartitions Spark packs the scan's listing into,
+    * or None when the listing is larger than one partition may hold.
+    */
+  private def splitCount(s: FileSourceScanExec): Option[Int] = {
     val session = s.relation.sparkSession
     val listing = s.selectedPartitions
     val maxSplitBytes = FilePartition.maxSplitBytes(session, listing)
-    // one partition packs at most maxSplitBytes of input, so a larger
-    // listing skips the per-file split walk (an oversized unsplittable
-    // file, really one split, stays unwrapped: conservative)
-    if (listing.totalFileSize > maxSplitBytes) Int.MaxValue
+    // the bound skips the per-file split walk for large listings (an
+    // oversized unsplittable file, really one split, stays unwrapped:
+    // conservative)
+    if (listing.totalFileSize > maxSplitBytes) None
     else {
       val splits = listing.filePartitionIterator.flatMap { p =>
         p.files.flatMap { f =>
@@ -72,7 +92,7 @@ object SingleSplitScans extends SparkStrategy {
             maxSplitBytes, p.values)
         }
       }.toSeq.sortBy(-_.length)
-      FilePartition.getFilePartitions(session, splits, maxSplitBytes).length
+      Some(FilePartition.getFilePartitions(session, splits, maxSplitBytes).length)
     }
   }
 }

@@ -1965,7 +1965,10 @@ object TextOps {
       .agg(count(lit(1)).as("cnt"))
 
   /** Finish counts → per-source KL(source ‖ corpus) — shared by the
-    * batch audit and q270's streaming drain.
+    * batch audit and q270's streaming drain. Each `ps·log(ps/pc)` term
+    * is summed as `DECIMAL(38,18)`, which adds exactly, so `kl` is the
+    * same double whatever order the terms arrive in (a double sum is
+    * not, and flips in the last bits from run to run).
     */
   private[graft] def klFromCounts(countsRaw: DataFrame): DataFrame = {
     val counts = countsRaw.persist()
@@ -1983,7 +1986,8 @@ object TextOps {
       .withColumn("pc", col("c_cnt").cast("double") /
         col("c_total").cast("double"))
       .groupBy(col("source"))
-      .agg(sum(col("ps") * log(col("ps") / col("pc"))).as("kl"),
+      .agg(sum((col("ps") * log(col("ps") / col("pc")))
+          .cast("decimal(38,18)")).cast("double").as("kl"),
         max(col("s_total")).as("n_tokens"),
         count(lit(1)).as("n_terms"))
       .select(col("source"), col("n_tokens"), col("n_terms"), col("kl"))

@@ -150,7 +150,8 @@ object StreamingOps {
     * plan is rebound to; the caller's session conf is never written, so
     * a query planned concurrently on it is unaffected. Micro-batches run
     * on a clone of that child, so the confs reach `perBatch`'s own plans
-    * too.
+    * too. That clone's streaming-listener bus is detached when the drain
+    * returns, so drains do not pile buses up on the SparkContext.
     *
     * The state-store providers a stateful stream leaves loaded
     * (HDFS-map heap, RocksDB native memory — see SessionHygiene) are
@@ -170,8 +171,10 @@ object StreamingOps {
       .outputMode(mode)
       .foreachBatch(perBatch)
       .trigger(Trigger.AvailableNow())
-    root.fold(w)(r => w.option("checkpointLocation", s"$r/_checkpoint"))
-      .start().awaitTermination()
+    val q = root.fold(w)(r => w.option("checkpointLocation", s"$r/_checkpoint"))
+      .start()
+    try q.awaitTermination()
+    finally ChildSessions.releaseStream(q)
   }
 
   /** The shuffle width a drain's state fold runs at when it builds a

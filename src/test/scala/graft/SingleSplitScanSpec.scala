@@ -1,17 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SingleSplitScanExec
+import org.apache.spark.sql.graft.{ChildSessions, SingleSplitScanExec}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-/** The one-split scan strategy removes exchanges only where the scan
-  * really is one partition, and never changes an answer. Runs on the
-  * shared (shipped) session; `plain` is a child session without it.
+/** The small-scan strategy removes exchanges only where the scan
+  * really is read as one task — a one-split scan, or a small listing of
+  * several splits under `CoalesceExec(1)` — and never changes an
+  * answer. Runs on the shared (shipped) session; `plain` is a child
+  * session without it.
   */
 class SingleSplitScanSpec extends SparkSpec {
 
@@ -40,6 +42,12 @@ class SingleSplitScanSpec extends SparkSpec {
     df.queryExecution.sparkPlan.collect { case w: SingleSplitScanExec => w }
       .size
 
+  /** Small multi-split scans planned as one task. */
+  private def coalesced(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect {
+      case c @ CoalesceExec(1, _: FileSourceScanExec) => c
+    }.size
+
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
@@ -54,6 +62,11 @@ class SingleSplitScanSpec extends SparkSpec {
     assert(new java.io.File(path).list().count(_.endsWith(".parquet")) == files)
     path
   }
+
+  /** Total size of a parquet directory's data files. */
+  private def bytes(path: String): Long =
+    new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(_.length).sum
 
   test("crm_etl: q01/q02/q44 plan without shuffles; every query's rows unchanged") {
     Seq("q01", "q02", "q44").foreach { q =>
@@ -74,42 +87,83 @@ class SingleSplitScanSpec extends SparkSpec {
       }
   }
 
+  private def grouped(s: SparkSession, path: String) =
+    s.read.parquet(path).groupBy(col("k")).agg(sum(col("v")).as("s"))
+      .orderBy(col("k"))
+
+  /** A child session whose maxSplitBytes (1 KB) is below every test listing. */
+  private def narrow: SparkSession = ChildSessions.withConfs(spark, Seq(
+    "spark.sql.files.maxPartitionBytes" -> "1024",
+    "spark.sql.files.openCostInBytes" -> "1024"))
+
+  /** A two-file listing above maxSplitBytes packs into several splits, so
+    * it keeps its exchanges; a small one reads as one task (next test).
+    */
   test("a two-file input keeps its exchanges; one file drops them") {
-    def grouped(s: SparkSession, path: String) =
-      s.read.parquet(path).groupBy(col("k")).agg(sum(col("v")).as("s"))
-    val one = grouped(spark, writeParquet("one", 1000, 1))
-    val two = grouped(spark, writeParquet("two", 1000, 2))
-    assert(rows(one) == rows(two))
+    val onePath = writeParquet("one", 1000, 1)
+    val twoPath = writeParquet("two", 1000, 2)
+    val one = grouped(spark, onePath)
     assert(wrapped(one) == 1 && shuffles(one) == 0)
-    assert(wrapped(two) == 0 && shuffles(two) > 0,
+    assert(bytes(twoPath) > 1024)
+    val two = grouped(narrow, twoPath)
+    assert(wrapped(two) == 0 && coalesced(two) == 0 && shuffles(two) > 0,
       s"two-split scan lost its exchange:\n${two.queryExecution.executedPlan}")
+    assert(two.collect().toSeq == one.collect().toSeq)
+    assert(two.collect().toSeq == grouped(plain, twoPath).collect().toSeq)
+  }
+
+  test("a small multi-file input reads as one task and matches the plain read") {
+    val threePath = writeParquet("three", 1000, 3)
+    val three = grouped(spark, threePath)
+    assert(coalesced(three) == 1 && wrapped(three) == 0 && shuffles(three) == 0,
+      s"three-file scan kept an exchange:\n${three.queryExecution.executedPlan}")
+    assert(three.collect().toSeq == grouped(plain, threePath).collect().toSeq)
+    // the one task reads the splits in the order a multi-task collect does
+    assert(spark.read.parquet(threePath).collect().toSeq ==
+      plain.read.parquet(threePath).collect().toSeq)
+
+    val above = grouped(narrow, threePath)
+    assert(wrapped(above) == 0 && coalesced(above) == 0 && shuffles(above) > 0,
+      s"listing above the bound lost its exchange:\n${above.queryExecution.executedPlan}")
+    assert(above.collect().toSeq == three.collect().toSeq)
   }
 
   test("a join against a multi-split side shuffles and matches the plain join") {
     val small = writeParquet("jsmall", 500, 1)
     val big = writeParquet("jbig", 2000, 3)
+    // a child whose maxSplitBytes holds the one-file side but not the
+    // three-file one, which packs into several splits
+    val bound = bytes(small)
+    assert(bytes(big) > bound)
+    val split = ChildSessions.withConfs(spark, Seq(
+      "spark.sql.files.maxPartitionBytes" -> bound.toString,
+      "spark.sql.files.openCostInBytes" -> bound.toString))
     // a sort-merge join: a broadcast would need no shuffle at all
     def joined(s: SparkSession) =
       s.read.parquet(small).as("a")
         .join(s.read.parquet(big).hint("merge").as("b"), col("a.v") === col("b.v"))
         .select(col("a.k"), col("a.v"), col("b.k").as("bk"))
-    val got = joined(spark)
-    assert(wrapped(got) == 1)
+    val got = joined(split)
+    assert(wrapped(got) == 1 && coalesced(got) == 0)
     assert(rows(got) == rows(joined(plain)))
     assert(shuffles(got) == 2,
       s"expected both join sides shuffled:\n${got.queryExecution.executedPlan}")
   }
 
-  test("a stateful stream over one file keeps its N state partitions") {
-    val src = writeParquet("stream", 1000, 1)
+  /** A stateful stream over a `files`-file source: its micro-batch scan
+    * is read as one task, its state operator still runs at the session
+    * width, and its counts match the batch.
+    */
+  private def statefulStream(files: Int): Unit = {
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     assert(nParts > 1)
+    val src = writeParquet(s"stream$files", 1000, files)
     val counts = scala.collection.mutable.Map.empty[Long, Long]
     val q = spark.readStream.schema(spark.read.parquet(src).schema)
       .parquet(src)
       .groupBy(col("k")).count()
       .writeStream.outputMode(OutputMode.Complete)
-      .option("checkpointLocation", tempDir("ckpt"))
+      .option("checkpointLocation", tempDir(s"ckpt$files"))
       .foreachBatch { (b: DataFrame, _: Long) =>
         b.collect().foreach(r => counts(r.getLong(0)) = r.getLong(1))
       }
@@ -117,14 +171,26 @@ class SingleSplitScanSpec extends SparkSpec {
     q.awaitTermination()
     val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
       .lastExecution.executedPlan
-    assert(nodes(plan).exists(_.isInstanceOf[SingleSplitScanExec]),
-      s"micro-batch scan not wrapped:\n$plan")
+    assert(nodes(plan).exists {
+      case _: SingleSplitScanExec => files == 1
+      case CoalesceExec(1, scan) =>
+        files > 1 && nodes(scan).exists(_.isInstanceOf[FileSourceScanExec])
+      case _ => false
+    }, s"$files-file micro-batch scan not read as one task:\n$plan")
     val ops = q.recentProgress.flatMap(_.stateOperators)
     assert(ops.nonEmpty && ops.forall(_.numShufflePartitions == nParts),
       s"state partitions: ${ops.map(_.numShufflePartitions).mkString(",")}")
     val batch = plain.read.parquet(src).groupBy(col("k")).count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(counts.toMap == batch)
+  }
+
+  test("a stateful stream over one file keeps its N state partitions") {
+    statefulStream(1)
+  }
+
+  test("a stateful stream over a three-file source keeps its N state partitions") {
+    statefulStream(3)
   }
 
   test("bucketed scans and scans with dynamic pruning filters are not wrapped") {

@@ -1288,6 +1288,26 @@ class Wave3Spec extends SparkSpec {
     Caches.releaseAll(spark)
   }
 
+  test("source KL drift is bit-identical across runs and input orders") {
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3))))
+    val first = bits(operators.TextOps.sourceKlDrift(spark, sfDir))
+    Caches.releaseAll(spark)
+    (2 to 10).foreach { i =>
+      assert(bits(operators.TextOps.sourceKlDrift(spark, sfDir)) == first,
+        s"run $i differs")
+      Caches.releaseAll(spark)
+    }
+    // the same counts, fed in a different order and partitioning
+    val counts = operators.TextOps.tokenCountsOf(
+      sources.Tables.documents(spark, sfDir))
+    val shuffled = bits(operators.TextOps.klFromCounts(
+      counts.repartition(7).sortWithinPartitions(col("cnt").desc, col("term"))))
+    Caches.releaseAll(spark)
+    assert(shuffled == first)
+  }
+
   test("trigram backoff: held-out docs only, finite negative log-probs") {
     val rows = operators.TextOps.trigramBackoffScore(spark, sfDir).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_trigrams"),
