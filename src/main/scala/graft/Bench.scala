@@ -151,7 +151,7 @@ object Bench {
         .asScala.map(_.getCollectionTime).filter(_ > 0).sum
     }
     def profile(name: String, sec: Double, ld: Double,
-        spin: Double, gc: Long): Unit = try {
+        spin: Double, gc: Long, err: Option[Throwable]): Unit = try {
       val rt = Runtime.getRuntime
       val heapMb = (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
       val sc = spark.sparkContext
@@ -162,7 +162,9 @@ object Bench {
         s""""heap_mb":$heapMb,"rss_mb":$rssMb,"tmp_mb":$tmpMb,""" +
         s""""persistent_rdds":$nRdd,"storage_mb":$storageMb,""" +
         s""""load1":${"%.2f".format(ld)},""" +
-        s""""spin_ms":${"%.2f".format(spin)},"gc_ms":$gc}""" + "\n"
+        s""""spin_ms":${"%.2f".format(spin)},"gc_ms":$gc""" +
+        err.fold("")(e => s""","err":${Verify.jsonString(e.toString)}""") +
+        "}\n"
       java.nio.file.Files.write(profilePath, line.getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
@@ -184,23 +186,27 @@ object Bench {
 
     def median(xs: Seq[Double]): Double =
       if (xs.isEmpty) -1.0 else { val s = xs.sorted; s(s.size / 2) }
-    // (name, sec, load1, spin_ms, gc_ms) per query
+    // (name, sec, load1, spin_ms, gc_ms, failed) per query
     val timed = selected.map { case (name, fn) =>
       val ld = load1
       val spin = spinMs
       val gc0 = gcMs
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      val err =
+        try { fn(spark, sfDir).count(); None }
+        catch { case t: Throwable => Some(t) }
       val dt = (System.nanoTime() - t0) / 1e9
       val gc = gcMs - gc0
       // release per-query persist() caches so later queries get the
       // full execution-memory pool (see Caches for the contract)
       Caches.releaseAll(spark)
-      profile(name, dt, ld, spin, gc)
+      profile(name, dt, ld, spin, gc, err)
       profileArtifacts(name)
-      (name, dt, ld, spin, gc.toDouble)
+      (name, dt, ld, spin, gc.toDouble, err.isDefined)
     }
-    val results = timed.map(t => t._1 -> t._2).toMap
+    // a failed query's time-to-failure is not a query time: its profile
+    // row carries "err", and it is left out of the map and the total
+    val results = timed.filterNot(_._6).map(t => t._1 -> t._2).toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -210,7 +216,7 @@ object Bench {
     // self-identify from the summary alone
     val totalLine =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
-        s""""n_queries":${results.size},""" +
+        s""""n_queries":${results.size},"n_failed":${timed.count(_._6)},""" +
         s""""load1_median":${"%.2f".format(median(timed.map(_._3)))},""" +
         s""""spin_ms_median":${"%.2f".format(median(timed.map(_._4)))},""" +
         s""""gc_ms_median":${"%.0f".format(median(timed.map(_._5)))}}"""

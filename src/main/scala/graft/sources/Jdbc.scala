@@ -6,6 +6,8 @@ import java.util.Locale
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** JDBC source/sink — the engine-side equivalent of the reference's
   * PostgreSQL persistence layer (`src/db.js:4-12`, pool write path
@@ -83,16 +85,32 @@ object Jdbc {
     * coalesce would propagate upstream and collapse the producing
     * computation to `maxConnections` tasks; the shuffle barrier keeps
     * upstream parallelism at cluster width and narrows only the write.
+    * An input already planned as one partition is written as it is:
+    * one connection, and no shuffle to fan it out to empty tasks.
     */
   def writeTable(df: DataFrame, url: String, table: String,
       batchSize: Int = 1000, maxConnections: Int = 8): Unit =
-    df.repartition(maxConnections)
+    writeInput(df, maxConnections)
       .write.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
       .option("batchsize", batchSize)
       .mode("append")
       .save()
+
+  /** The frame [[writeTable]] writes: `df` itself when its physical
+    * plan, as prepared before anything runs, reports `SinglePartition`,
+    * else `df.repartition(maxConnections)`.
+    */
+  private[graft] def writeInput(df: DataFrame,
+      maxConnections: Int): DataFrame = {
+    val prepared = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    if (prepared.outputPartitioning == SinglePartition) df
+    else df.repartition(maxConnections)
+  }
 
   /** Range-partitioned parallel read: Spark issues `numPartitions`
     * disjoint range queries on `partitionCol`, one per task.

@@ -839,10 +839,13 @@ private[lake] case class LakeVersionOffset(version: Long)
   * committed version (a metadata listing); each batch plans the
   * files added in (start, end] — the block-108 append-only set-diff
   * — and decodes them through the same vectorized reader factory as
-  * batch scans (row handoff; a streaming batch is consumed once).
-  * Exactly-once: the offset log stores version numbers, a restarted
-  * query resumes from its checkpointed version, and a batch replay
-  * plans the identical file set (manifests are immutable).
+  * batch scans (row handoff; a streaming batch is consumed once). A
+  * batch whose files fit `maxSplitBytes` is one split (one task, which
+  * `SingleSplitScans` reports as one partition); a larger batch is
+  * one split per file. Exactly-once: the offset log stores version
+  * numbers, a restarted query resumes from its checkpointed version,
+  * and a batch replay plans the identical file set (manifests are
+  * immutable).
   */
 private[lake] class LakeMicroBatchStream(root: String,
     schema: StructType, starting: Long)
@@ -893,10 +896,31 @@ private[lake] class LakeMicroBatchStream(root: String,
     require(base.subsetOf(now.files.map(_.path).toSet),
       s"graft-lake: stream range ($v0,$v1] spans a rewrite — " +
         "append-only; restart the stream from a full snapshot")
-    now.files.filterNot(f => base(f.path)).sortBy(_.fileId)
-      .map(f => LakeFileSplit(Seq((s"$root/${f.path}",
-        f.dvPath.map(d => s"$root/$d")))): InputPartition).toArray
+    val added = now.files.filterNot(f => base(f.path)).sortBy(_.fileId)
+      .map(f => (s"$root/${f.path}", f.dvPath.map(d => s"$root/$d")))
+    if (fitsOneSplit(added.map(_._1))) Array(LakeFileSplit(added))
+    else added.map(f => LakeFileSplit(Seq(f)): InputPartition).toArray
   }
+
+  /** Whether several data files fit in one split: their total on-disk
+    * size is at most Spark's `maxSplitBytes` for that listing, the
+    * bound `SingleSplitScans` applies to V1 listings. `maxSplitBytes`
+    * never exceeds `maxPartitionBytes`, so files are statted only
+    * until their running total passes it.
+    */
+  private def fitsOneSplit(paths: Seq[String]): Boolean =
+    paths.length > 1 && org.apache.spark.sql.classic.SparkSession
+      .getActiveSession.exists { session =>
+        val conf = session.sessionState.conf
+        val lakeFs = fs
+        val it = paths.iterator
+        var total = 0L
+        while (it.hasNext && total <= conf.filesMaxPartitionBytes)
+          total += lakeFs.getFileStatus(new HPath(it.next())).getLen
+        !it.hasNext && total <= org.apache.spark.sql.execution.datasources
+          .FilePartition.maxSplitBytes(session,
+            total + paths.length * conf.filesOpenCostInBytes)
+      }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new LakeReaderFactory(schema,

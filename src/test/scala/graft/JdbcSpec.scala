@@ -118,6 +118,35 @@ class JdbcSpec extends SparkSpec {
       "no per-call Derby directory is created")
   }
 
+  test("a one-partition input writes without a shuffle; a wider one repartitions") {
+    def exchanges(df: DataFrame): Seq[String] = preparedPlan(df).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
+        e.outputPartitioning.toString
+    }
+    // the shared session reads the sf0.001 events file as one task;
+    // a plain session without the small-scan strategy hash-partitions
+    // the aggregate across the session width
+    def summary(s: org.apache.spark.sql.SparkSession) =
+      Tables.events(s, sfDir).groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_events"))
+    val one = summary(spark)
+    val wide = summary(spark.newSession())
+    assert(exchanges(one).isEmpty)
+    assert(exchanges(Jdbc.writeInput(one, 4)).isEmpty)
+    assert(exchanges(wide).nonEmpty)
+    assert(exchanges(Jdbc.writeInput(wide, 4)).exists(_.contains("RoundRobin")),
+      preparedPlan(Jdbc.writeInput(wide, 4)))
+    val back = Seq(one, wide).map { df =>
+      val (url, table) = Jdbc.scratchTable("width")
+      Jdbc.writeTable(df, url, table, maxConnections = 4)
+      Jdbc.readTableWhole(spark, url, table)
+        .orderBy(col("event_type")).collect().toSeq
+    }
+    assert(back(0).nonEmpty && back(0) == back(1))
+    assert(back(0) == one.orderBy(col("event_type")).collect().toSeq)
+    Caches.releaseAll(spark)
+  }
+
   test("a write that fails still drops its table at release") {
     val (url, table) = Jdbc.scratchTable("failing")
     val poisoned = Tables.customer(spark, sfDir)

@@ -1,18 +1,26 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+import org.apache.spark.sql.execution.{CoalesceExec, ExpandExec, FileSourceScanExec, InputAdapter, LocalTableScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ChildSessions, SingleSplitScanExec}
+import org.apache.spark.sql.graft.{ChildSessions, SingleSplitScanExec, SinglePartitionExpandExec}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** The small-scan strategy removes exchanges only where the scan
-  * really is read as one task — a one-split scan, or a small listing of
-  * several splits under `CoalesceExec(1)` — and never changes an
-  * answer. Runs on the shared (shipped) session; `plain` is a child
+import graft.sources.lake.{GraftLake, LakeTableProvider}
+import graft.streaming.StreamingOps
+
+/** The small-scan strategy removes exchanges only where the input
+  * really is one task — a one-split scan, a small listing of several
+  * splits under `CoalesceExec(1)`, a lake micro-batch packed into one
+  * split, a driver-sorted local relation, an Expand over any of these —
+  * and never changes an answer. Runs on the shared (shipped) session; `plain` is a child
   * session without it.
   */
 class SingleSplitScanSpec extends SparkSpec {
@@ -227,5 +235,175 @@ class SingleSplitScanSpec extends SparkSpec {
     }.isEmpty)
     assert(rows(pruned) == rows(plain.read.parquet(fact)
       .join(plain.read.parquet(dim).filter(col("v") === 3L), col("p") === col("k"))))
+  }
+
+  /** A lake table of (o_orderkey, o_custkey): one append of 3000 rows
+    * in 3 files.
+    */
+  private def lakeTable(tag: String): String = {
+    val root = tempDir(tag) + "/t"
+    val fs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    GraftLake.createTable(fs, root, StructType(Seq(
+      StructField("o_orderkey", LongType), StructField("o_custkey", LongType))),
+      Seq("o_orderkey", "o_custkey"), Some("o_orderkey"))
+    spark.range(3000)
+      .select(col("id").as("o_orderkey"), (col("id") % 97).as("o_custkey"))
+      .repartition(3, col("o_orderkey"))
+      .write.format(classOf[LakeTableProvider].getName)
+      .option("path", root).option("batchId", "b0").mode("append").save()
+    assert(GraftLake.readMeta(root).files.length == 3)
+    root
+  }
+
+  /** One drained lake micro-batch, as the drain body saw it. */
+  private case class LakeBatch(partitions: Int, onePartition: Boolean,
+      bodyShuffles: Int, width: String, row: Row)
+
+  /** Drain `session`'s lake stream over `root` through
+    * `StreamingOps.drain` (with `confs`), aggregating each batch as the
+    * q558/q559 drain bodies do.
+    */
+  private def lakeDrain(session: SparkSession, root: String,
+      confs: Map[String, String] = Map.empty): Seq[LakeBatch] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[LakeBatch]
+    val stream = session.readStream.format(classOf[LakeTableProvider].getName)
+      .option("path", root).load()
+    StreamingOps.drain(stream, Some(tempDir("lakecp")), confs = confs) { (b, _) =>
+      val body = b.agg(count(lit(1)), sum(col("o_orderkey")))
+      val row = body.collect()(0)
+      out += LakeBatch(b.rdd.getNumPartitions,
+        preparedPlan(b).outputPartitioning == SinglePartition, shuffles(body),
+        b.sparkSession.conf.get("spark.sql.shuffle.partitions"), row)
+    }
+    out.toSeq
+  }
+
+  test("a lake drain whose batch fits the bound aggregates without an exchange") {
+    val root = lakeTable("lakefit")
+    val Seq(got) = lakeDrain(spark, root)
+    assert(got.partitions == 1 && got.onePartition && got.bodyShuffles == 0, got)
+    // the source packs the batch on any session; only the strategy
+    // reports it as one partition
+    val Seq(ref) = lakeDrain(plain, root)
+    assert(ref.partitions == 1 && !ref.onePartition && ref.bodyShuffles > 0, ref)
+    assert(got.row == ref.row && got.row == Row(3000L, (0L until 3000L).sum))
+  }
+
+  test("a lake drain above the bound keeps per-file splits and its exchange") {
+    val root = lakeTable("lakeover")
+    val files = GraftLake.readMeta(root).files
+      .map(f => new java.io.File(s"$root/${f.path}").length).sum
+    assert(files > 1024)
+    val Seq(got) = lakeDrain(narrow, root)
+    assert(got.partitions == 3 && !got.onePartition && got.bodyShuffles > 0, got)
+    assert(got.row == lakeDrain(plain, root).head.row)
+  }
+
+  test("a lake drain on a child session (drain confs) still reads as one task") {
+    val root = lakeTable("lakechild")
+    val Seq(got) = lakeDrain(spark, root, Map("spark.sql.shuffle.partitions" -> "3"))
+    assert(got.width == "3", "the drain body did not run on the child")
+    assert(got.partitions == 1 && got.onePartition && got.bodyShuffles == 0, got)
+    assert(got.row == Row(3000L, (0L until 3000L).sum))
+  }
+
+  test("concurrent q559 calls on one session both return the plain session's rows") {
+    val golden = query("q559")(plain, sfDir).collect().toSeq
+    Caches.releaseAll(plain)
+    assert(golden.length == 2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val futures = (1 to 2).map(_ => pool.submit(
+        new java.util.concurrent.Callable[Seq[Row]] {
+          def call() = query("q559")(spark, sfDir).collect().toSeq
+        }))
+      futures.foreach(f => assert(f.get() == golden))
+    } finally pool.shutdown()
+    Caches.releaseAll(spark)
+  }
+
+  test("a sorted local relation is one driver-sorted scan with Spark's key order") {
+    // 40 rows over 4 local partitions: keys tie across partitions
+    val data = (0 until 40).map(i => (if (i % 7 == 0) None else Some(i % 3), i))
+    def local(s: SparkSession) = s.createDataFrame(data).toDF("k", "v")
+    /** Spark's sort and the driver sort agree on the key sequence and
+      * the rows; Spark leaves ties in no fixed order (not even over one
+      * input partition), the driver sort in input order.
+      */
+    def sameSort(keys: Seq[org.apache.spark.sql.Column],
+        order: Seq[org.apache.spark.sql.Column],
+        inputOrder: Seq[(Option[Int], Int)]): Unit = {
+      val got = local(spark).orderBy(order: _*)
+      val plan = preparedPlan(got)
+      assert(plan.isInstanceOf[LocalTableScanExec], s"not one local scan:\n$plan")
+      val ref = local(plain).orderBy(order: _*)
+      assert(ref.queryExecution.executedPlan.toString.contains("rangepartitioning"))
+      def keyed(df: DataFrame) = df.select(keys: _*).collect().toSeq
+      assert(keyed(got) == keyed(ref))
+      assert(rows(got) == rows(ref))
+      assert(got.collect().toSeq.map(_.getInt(1)) == inputOrder.map(_._2))
+    }
+    sameSort(Seq(col("k")), Seq(col("k").desc_nulls_last),
+      data.sortBy(_._1.fold(1)(k => -k)))
+    sameSort(Seq(col("v") % 4, col("k")), Seq((col("v") % 4).asc, col("k")),
+      data.sortBy(r => (r._2 % 4, r._1.getOrElse(Int.MinValue))))
+    // a key the driver cannot evaluate (a scalar subquery) keeps
+    // Spark's sort
+    local(spark).createOrReplaceTempView("graft_onesplit_local")
+    val sub = spark.sql("SELECT * FROM graft_onesplit_local " +
+      "ORDER BY v + (SELECT max(id) FROM range(3))")
+    assert(nodes(preparedPlan(sub)).exists(_.isInstanceOf[SortExec]),
+      s"subquery key sorted on the driver:\n${preparedPlan(sub)}")
+    assert(sub.collect().toSeq.map(_.getInt(1)) == (0 until 40))
+    spark.catalog.dropTempView("graft_onesplit_local")
+  }
+
+  /** Two distinct aggregates over different columns: planned with an
+    * Expand under the partial aggregate.
+    */
+  private def distinctCounts(s: SparkSession, path: String) =
+    s.read.parquet(path).groupBy(col("k"))
+      .agg(countDistinct(col("v")).as("dv"),
+        countDistinct(col("v") % 3).as("dv3"), sum(col("v")).as("s"))
+      .orderBy(col("k"))
+
+  /** The operators of one whole-stage-codegen stage. */
+  private def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case _: InputAdapter => Nil
+    case _ => p.children.flatMap(stage)
+  })
+
+  /** Whether some codegen stage holds an aggregate directly over the
+    * Expand marker, with the Expand itself in that stage.
+    */
+  private def expandFused(df: DataFrame): Boolean =
+    nodes(df.queryExecution.executedPlan).exists {
+      case w: WholeStageCodegenExec => stage(w.child).exists {
+        case h: HashAggregateExec => h.child match {
+          case SinglePartitionExpandExec(_: ExpandExec) => true
+          case _ => false
+        }
+        case _ => false
+      }
+      case _ => false
+    }
+
+  test("an Expand over a one-split scan runs without exchanges, fused with its aggregate") {
+    val onePath = writeParquet("expand1", 1000, 1)
+    val got = distinctCounts(spark, onePath)
+    val expected = distinctCounts(plain, onePath).collect().toSeq
+    assert(got.collect().toSeq == expected)
+    assert(shuffles(got) == 0, s"Expand kept an exchange:\n${got.queryExecution.executedPlan}")
+    assert(expandFused(got), s"Expand not fused:\n${got.queryExecution.executedPlan}")
+  }
+
+  test("an Expand over a multi-split scan keeps its exchanges") {
+    val threePath = writeParquet("expand3", 1000, 3)
+    val got = distinctCounts(narrow, threePath)
+    val ref = distinctCounts(plain, threePath)
+    assert(got.collect().toSeq == ref.collect().toSeq)
+    assert(shuffles(got) > 0 && shuffles(got) == shuffles(ref),
+      s"exchanges differ from the plain plan:\n${got.queryExecution.executedPlan}")
+    assert(expandFused(got), s"Expand not fused:\n${got.queryExecution.executedPlan}")
   }
 }
